@@ -543,7 +543,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")), fullJson)
     catch { case _: Throwable => () }
     System.out.flush()
-    println(s"""{"metric":"total_compact","total_sec":${jnum(total, 2)},""" +
+    println(s"""{"metric":"summary","total_sec":${jnum(total, 2)},""" +
       s""""n":${allResults.size},"failed":${arr(failed)},""" +
       s""""over_budget":${arr(overBudget)},""" +
       s""""noise_suspect":$noiseSuspect,""" +

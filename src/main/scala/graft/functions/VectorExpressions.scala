@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §2.11).
@@ -409,171 +408,5 @@ object VectorExpressions {
 
     override protected def withNewChildrenInternal(
         l: Expression, r: Expression): L2SqTableD = copy(left = l, right = r)
-  }
-
-  /** Runtime kernel shared by [[PqEncD]]'s eval and codegen paths: the PQ
-    * code (per-subspace argmin) and minimum rounded distance for every
-    * subspace in ONE pass over the full vector, composing — value- and
-    * null-semantics-identically — the chain it fuses:
-    *
-    *   sv_s   = slice(vec, s·subDim + 1, subDim)
-    *   dt_s   = l2sq_table_d(sv_s, mats(s))          (rounded entries)
-    *   code_s = (array_position(dt_s, array_min(dt_s)) - 1)::int
-    *   min_s  = array_min(dt_s)
-    *
-    * without materializing the m dense tables (k boxed doubles each per
-    * row — the allocation AND the extra array_min/array_position scans
-    * were the corpus-side encode cost at k=256 × m=8). Semantics
-    * replicated exactly: an entry is null when the slice's length differs
-    * from that centroid row's or a sliced element is null (then no entry
-    * of that subspace survives, matching [[l2sqTable]]'s uniform-length
-    * books); `array_min` skips nulls and orders by `Double.compare` (NaN
-    * greatest, equal to itself); `array_position` returns the FIRST index
-    * whose entry equals the final minimum — streaming strict-less
-    * tracking yields the same index under a total order. All-null table →
-    * null code and null min (array_position(dt, null) is null).
-    */
-  def pqEncTable(vec: ArrayData, mats: ArrayData,
-                 vIsFloat: Boolean): InternalRow = {
-    val m = mats.numElements()
-    val codes = new Array[Any](m)
-    val mins = new Array[Any](m)
-    val subDim =
-      if (m > 0 && mats.getArray(0).numElements() > 0)
-        mats.getArray(0).getArray(0).numElements()
-      else 0
-    val vecLen = vec.numElements()
-    var s = 0
-    while (s < m) {
-      val book = mats.getArray(s)
-      val k = book.numElements()
-      val off = s * subDim
-      // slice() returns the (possibly shorter) available tail; a short
-      // slice then null-entries the whole subspace via length mismatch.
-      val svLen = math.min(math.max(vecLen - off, 0), subDim)
-      var minV = 0.0
-      var minSet = false
-      var argmin = -1
-      var j = 0
-      while (j < k) {
-        val c = book.getArray(j)
-        var entryNull = svLen != c.numElements()
-        var d2 = 0.0
-        if (!entryNull) {
-          var i = 0
-          var ok = true
-          while (ok && i < svLen) {
-            if (vec.isNullAt(off + i) || c.isNullAt(i)) ok = false
-            else {
-              val x =
-                if (vIsFloat) vec.getFloat(off + i).toDouble
-                else vec.getDouble(off + i)
-              val d = x - c.getDouble(i)
-              d2 += d * d
-              i += 1
-            }
-          }
-          entryNull = !ok
-        }
-        if (!entryNull) {
-          val r = round6(d2)
-          if (!minSet || java.lang.Double.compare(r, minV) < 0) {
-            minV = r
-            minSet = true
-            argmin = j
-          }
-        }
-        j += 1
-      }
-      codes(s) = if (minSet) Integer.valueOf(argmin) else null
-      mins(s) = if (minSet) java.lang.Double.valueOf(minV) else null
-      s += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](new GenericArrayData(codes), new GenericArrayData(mins)))
-  }
-
-  /** A [[pqEncTable]] row with both arrays all-null — the null-vector
-    * result (each downstream consumer sees the same per-element nulls the
-    * sliced chain produced).
-    */
-  def pqEncNullRow(mats: ArrayData): InternalRow = {
-    val m = mats.numElements()
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](new GenericArrayData(new Array[Any](m)),
-        new GenericArrayData(new Array[Any](m))))
-  }
-
-  /** `pq_enc_d(array<float|double>, array<array<array<double>>>) →
-    * struct<codes: array<int>, mind2: array<double>>`: fused PQ encode —
-    * per-subspace argmin code and minimum rounded squared-L2 distance in
-    * one codegen'd call (see [[pqEncTable]] for the exact chain it
-    * replaces and the replicated semantics; pinned bit-identical to that
-    * chain by a differential property test). The corpus-side encode of
-    * every PQ/ADC/IVF-PQ query evaluates this once per row; the unfused
-    * chain allocated m dense k-entry boxed tables per row and re-scanned
-    * each twice (array_min + array_position).
-    */
-  case class PqEncD(left: Expression, right: Expression)
-      extends BinaryExpression {
-
-    override def dataType: DataType = StructType(Seq(
-      StructField("codes", ArrayType(IntegerType, containsNull = true),
-        nullable = false),
-      StructField("mind2", ArrayType(DoubleType, containsNull = true),
-        nullable = false)))
-    override def nullable: Boolean = false
-    override def prettyName: String = "pq_enc_d"
-
-    private def vIsFloat: Boolean = left.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _                       => false
-    }
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(vt, _),
-              ArrayType(ArrayType(ArrayType(DoubleType, _), _), _))
-            if vt == FloatType || vt == DoubleType =>
-          TypeCheckResult.TypeCheckSuccess
-        case _ => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<float|double>, " +
-            s"array<array<array<double>>>), got " +
-            s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-      }
-
-    // A null vector yields the all-null-elements struct (what the sliced
-    // chain computes), never a null struct — hand-rolled eval, not
-    // nullSafeEval.
-    override def eval(input: InternalRow): Any = {
-      val m = right.eval(input).asInstanceOf[ArrayData]
-      if (m == null) return null // matrix is a literal; never null in practice
-      val v = left.eval(input)
-      if (v == null) pqEncNullRow(m)
-      else pqEncTable(v.asInstanceOf[ArrayData], m, vIsFloat)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val vE = left.genCode(ctx)
-      val mE = right.genCode(ctx)
-      val code =
-        s"""
-           |${vE.code}
-           |${mE.code}
-           |org.apache.spark.sql.catalyst.InternalRow ${ev.value};
-           |if (${vE.isNull}) {
-           |  ${ev.value} = graft.functions.VectorExpressions.pqEncNullRow(${mE.value});
-           |} else {
-           |  ${ev.value} = graft.functions.VectorExpressions.pqEncTable(
-           |    ${vE.value}, ${mE.value}, $vIsFloat);
-           |}
-         """.stripMargin
-      ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-        .BlockHelper(new StringContext(code)).code(),
-        isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-    }
-
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): PqEncD = copy(left = l, right = r)
   }
 }

@@ -79,17 +79,13 @@ object VectorFunctions {
   def planeDot(v: Column, p: Int, dims: Int): Column =
     dotD(v, typedlit((0 until dims).map(planeCoeffValue(p, _))))
 
-  /** Signed-random-projection LSH bucket id over `planes` hyperplanes.
-    * `dims` must match the embedding length (coefficients are plan-time
-    * literals).
-    */
-  def lshBucket(v: Column, planes: Int, dims: Int): Column =
-    lshBucketAt(v, planes, dims, 0)
-
-  /** [[lshBucket]] drawing planes from the GLOBAL plane sequence starting
-    * at `planeOffset` — independent hash tables for AND-OR amplification
-    * share one deterministic coefficient stream (table t uses planes
-    * [t·P, (t+1)·P), so adding tables never re-randomizes existing ones).
+  /** Signed-random-projection LSH bucket id over `planes` hyperplanes
+    * drawn from the GLOBAL plane sequence starting at `planeOffset` — a
+    * single table uses offset 0; independent hash tables for AND-OR
+    * amplification share one deterministic coefficient stream (table t
+    * uses planes [t·P, (t+1)·P), so adding tables never re-randomizes
+    * existing ones). `dims` must match the embedding length (coefficients
+    * are plan-time literals).
     */
   def lshBucketAt(v: Column, planes: Int, dims: Int, planeOffset: Int): Column =
     (0 until planes).map { p =>

@@ -288,7 +288,7 @@ object Dedup {
     * ≥-threshold pairs.
     *
     * WHEN TO PICK THIS PATH (measured, SCALE.md round 16): on a roomy
-    * host the relational [[nearDuplicatesPlanned]] is ~2× faster (the
+    * host the relational [[nearDuplicates]] is ~2× faster (the
     * chunked-md5 pipeline wins when compute is the bill), but under
     * memory pressure the ranking INVERTS — in a 4 GiB / 0.2-fraction
     * stress session at sf1 this path finishes with ZERO spill while the
@@ -656,11 +656,6 @@ object Dedup {
     * close to the threshold should either raise `nPerms` (64+) or mine at
     * a LOWER threshold and post-filter on the emitted exact `jaccard`.
     *
-    * `bands = Some(b)` is the explicit override (b ≤ 4 single-md5
-    * chunk signatures, r = 1 — the recall-maximal, candidate-heavy
-    * legacy shape; useful when the caller wants near-exhaustive
-    * candidates at low thresholds and accepts the verify cost).
-    *
     * Jaccard is computed ONLY for candidate pairs (candidates → doc_a's
     * shingles → equi-join doc_b's shingles) — never over the O(N²) pair
     * space. The shingle set is cached: it feeds the signatures, the sizes,
@@ -672,8 +667,7 @@ object Dedup {
     * verification joins — the classic hot-key blowup at corpus scale.
     */
   def nearDuplicates(docs: DataFrame, idCol: String, textCol: String,
-                     minJaccard: Double = 0.8, bands: Option[Int] = None,
-                     n: Int = 3,
+                     minJaccard: Double = 0.8, n: Int = 3,
                      maxDocFrequency: Option[Double] = Some(0.1),
                      nPerms: Int = 16): DataFrame = {
     // ONE scoped cache of the raw exploded shingles; the hot-shingle
@@ -685,15 +679,10 @@ object Dedup {
       case None        => raw
       case Some(maxDf) => hotFiltered(raw, docs, idCol, maxDf)
     }
-    val (plan, sig) = bands match {
-      case None =>
-        val p = bandsFor(nPerms, minJaccard)
-        (p, minhashSignaturesPlanned(sh, idCol, p))
-      case Some(b) =>
-        (LshBanding(b, 1, 1.0 / b), minhashSignatures(sh, idCol, b))
-    }
-    verifiedPlannedPairs(lshCandidates(sig, idCol), sh, idCol, minJaccard,
-      plan)
+    val plan = bandsFor(nPerms, minJaccard)
+    verifiedPlannedPairs(
+      lshCandidates(minhashSignaturesPlanned(sh, idCol, plan), idCol), sh,
+      idCol, minJaccard, plan)
   }
 
   /** Asymmetric containment pairs: containment(A in B) = |A∩B| / |A| over

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for op-internal caches.
   *
@@ -27,24 +28,20 @@ object OpCaches {
     new java.util.concurrent.ConcurrentHashMap[org.apache.spark.rdd.RDD[_],
       java.lang.Boolean]())
 
-  private val canonicalLive = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, java.lang.Boolean]()
-
-  /** Cache `df` and register it for a later [[releaseAll]].
+  /** Cache `df` and register it for a later [[releaseAll]] — unless the
+    * CacheManager already holds an entry for an equal plan.
     *
-    * Deduped by CANONICALIZED plan (r16 advice): a streaming admission
-    * loop re-derives an equivalent reference frame every micro-batch, and
-    * re-issuing `cache()` on a canonically-equal plan both grows this
-    * registry unboundedly and spams "Asked to cache already cached data"
-    * warnings per batch. When an equivalent entry is live the frame is
-    * returned UNcached — Spark's CacheManager substitutes the existing
-    * InMemoryRelation at execution anyway (its lookup is canonical-plan
-    * based, the exact mechanism that made the second cache() a no-op).
+    * `storageLevel` is the CacheManager's own canonical-plan lookup: a
+    * streaming admission loop re-derives an equivalent reference frame
+    * every micro-batch, and re-issuing `cache()` on it would grow this
+    * registry unboundedly and warn "Asked to cache already cached data"
+    * per batch. An existing entry is substituted at execution anyway.
+    * Because the lookup is live, a bare `clearCache()` never leaves a
+    * frame uncached, and a caller-owned cache of an equal plan is never
+    * registered, so [[releaseAll]] leaves it alone.
     */
   private[graft] def scoped(df: DataFrame): DataFrame = {
-    val key = try df.queryExecution.analyzed.canonicalized
-      catch { case scala.util.control.NonFatal(_) => null }
-    if (key == null || canonicalLive.putIfAbsent(key, java.lang.Boolean.TRUE) == null) {
+    if (df.storageLevel == StorageLevel.NONE) {
       df.cache()
       frames.add(df)
     }
@@ -111,7 +108,6 @@ object OpCaches {
       catch { case _: Throwable => () }
       cit.remove()
     }
-    canonicalLive.clear()
   }
 
   /** Number of currently-registered cached frames (for tests/monitoring). */

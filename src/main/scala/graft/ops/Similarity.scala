@@ -154,10 +154,10 @@ object Similarity {
              idCol: String, vecCol: String, k: Int, planes: Int, dims: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       normD(col(vecCol)).as("__qn"),
-      lshBucket(col(vecCol), planes, dims).as("bucket"))
+      lshBucketAt(col(vecCol), planes, dims, 0).as("bucket"))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("__cv"),
       normD(col(vecCol)).as("__cn"),
-      lshBucket(col(vecCol), planes, dims).as("bucket"))
+      lshBucketAt(col(vecCol), planes, dims, 0).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("cand_id"))
       .withColumn("cosine",
@@ -184,12 +184,12 @@ object Similarity {
     }: _*)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       normD(col(vecCol)).as("__qn"),
-      lshBucket(col(vecCol), planes, dims).as("__home"))
+      lshBucketAt(col(vecCol), planes, dims, 0).as("__home"))
       .withColumn("bucket", explode(probes))
       .drop("__home")
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("__cv"),
       normD(col(vecCol)).as("__cn"),
-      lshBucket(col(vecCol), planes, dims).as("bucket"))
+      lshBucketAt(col(vecCol), planes, dims, 0).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
@@ -505,58 +505,6 @@ object Similarity {
       .select(col("query_id"), col("cluster"), col("cand_id"), col("cosine"), col("rn"))
   }
 
-  /** Embedding-cosine near-duplicate mining (the 5th dedup modality): pairs
-    * whose cosine ≥ `threshold`, candidate-limited to LSH co-bucketed
-    * vectors — the corpus is never self-joined at large, only within
-    * buckets. Recall is tunable via `planes` (fewer planes → bigger buckets
-    * → higher recall, more work).
-    *
-    * SIZING RULE (measured, SCALE.md "sf0.1 → sf1 scaling probe"): the
-    * bucket count is FIXED at 2^planes, so per-bucket occupancy grows
-    * linearly with the corpus and candidate pairs quadratically — 46×
-    * runtime at 10× rows once occupancy left the ~10 range. Use this op
-    * only while n / 2^planes ≲ 10⁴ candidate pairs per bucket-space
-    * stays comfortable (n ≲ 10⁴ vectors at the default planes); past
-    * that, switch to [[cosinePairsMultiTable]] with
-    * P ≈ log₂(n / targetBucketSize) and T from the recall target —
-    * same exact-verify contract, bounded occupancy at any n.
-    */
-  def cosinePairs(emb: DataFrame, idCol: String, vecCol: String,
-                  threshold: Double, planes: Int, dims: Int): DataFrame = {
-    val withBucket = OpCaches.scoped(emb.select(col(idCol), col(vecCol),
-      normD(col(vecCol)).as("__n"),
-      lshBucket(col(vecCol), planes, dims).as("bucket")))
-    val a = withBucket.select(col(idCol).as("id_a"), col(vecCol).as("__va"),
-      col("__n").as("__na"), col("bucket"))
-    val b = withBucket.select(col(idCol).as("id_b"), col(vecCol).as("__vb"),
-      col("__n").as("__nb"), col("bucket"))
-    a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cosine",
-        round(dotD(col("__va"), col("__vb")) / nullif(col("__na") * col("__nb"), lit(0.0)), 6))
-      .filter(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("bucket"), col("cosine"))
-  }
-
-  /** AND-OR amplified LSH pair mining — the scale path for [[cosinePairs]].
-    *
-    * A single table's bucket count is FIXED (2^planes), so bucket occupancy
-    * grows linearly with the corpus and within-bucket candidate pairs
-    * quadratically — the 10× derived-corpus probe measured 46× runtime for
-    * the single-table op (SCALE.md). The classic fix is AND-OR
-    * amplification: raise `planes` so per-bucket occupancy stays bounded
-    * (candidate volume shrinks exponentially in P), and mine `tables`
-    * INDEPENDENT plane sets to buy back the recall the extra AND bits cost
-    * — P(pair collides somewhere | angle θ) = 1 − (1 − p^P)^T with
-    * p = 1 − θ/π. Size P ≈ log₂(n / targetBucketSize) as the corpus grows;
-    * T from the recall target.
-    *
-    * Candidates are the DISTINCT union of per-table bucket collisions
-    * (a pair colliding in several tables verifies once); verification is
-    * the exact cosine. Each table's planes come from the shared
-    * deterministic coefficient stream at offset t·P, so results are
-    * reproducible across engines and runs.
-    */
   /** The multi-table sizing rule applied, so callers don't hand-derive it:
     * the smallest P with expected bucket occupancy n/2^P ≤
     * `targetBucketSize`, i.e. P = ⌈log₂(n / targetBucketSize)⌉, clamped to
@@ -579,6 +527,28 @@ object Similarity {
     math.min(maxPlanes, math.max(minPlanes, needed))
   }
 
+  /** Embedding-cosine near-duplicate mining (the 5th dedup modality) by
+    * AND-OR amplified LSH: pairs whose exact cosine ≥ `threshold`,
+    * candidate-limited to vectors that share a bucket in some table — the
+    * corpus is never self-joined at large, only within buckets.
+    *
+    * One table's bucket count is FIXED (2^planes), so bucket occupancy
+    * grows linearly with the corpus and within-bucket candidate pairs
+    * quadratically — the 10× derived-corpus probe measured 46× runtime for
+    * a single table at fixed planes (SCALE.md). The classic fix is AND-OR
+    * amplification: raise `planes` so per-bucket occupancy stays bounded
+    * (candidate volume shrinks exponentially in P), and mine `tables`
+    * INDEPENDENT plane sets to buy back the recall the extra AND bits cost
+    * — P(pair collides somewhere | angle θ) = 1 − (1 − p^P)^T with
+    * p = 1 − θ/π. Size P with [[planesFor]] as the corpus grows; T from
+    * the recall target.
+    *
+    * Candidates are the DISTINCT union of per-table bucket collisions
+    * (a pair colliding in several tables verifies once); verification is
+    * the exact cosine. Each table's planes come from the shared
+    * deterministic coefficient stream at offset t·P, so results are
+    * reproducible across engines and runs.
+    */
   def cosinePairsMultiTable(emb: DataFrame, idCol: String, vecCol: String,
                             threshold: Double, planes: Int, tables: Int,
                             dims: Int): DataFrame = {
@@ -678,7 +648,7 @@ object Similarity {
     * nearest centroids for candidate purposes (multi-assignment recovers
     * pairs straddling a cluster boundary, the failure mode of hard
     * single-assignment SemDeDup) — then exact cosine ≥ `threshold`
-    * verifies. Complements [[cosinePairs]]' LSH buckets with
+    * verifies. Complements [[cosinePairsMultiTable]]'s LSH buckets with
     * DATA-ADAPTIVE partitions: fitted centroids follow corpus structure,
     * so on clustered embedding spaces the same candidate budget buys more
     * recall. The self-join is per-cluster only; assignment is map-side
@@ -911,15 +881,14 @@ object Similarity {
       // (subspace, code, subvector) triples for every row, assignment
       // entirely map-side; then one shuffle: mean per (s, code, pos),
       // rounded to 6 dp — the same update centroids() applies, keyed by
-      // subspace as well. r17 opt: assignment is the fused pqEncStruct
-      // kernel (one call per row) instead of m dense boxed tables +
-      // argmin scans; the sv slices remain (the update mean needs them).
-      val enc = base.select(col(vecCol),
-        pqEncStruct(col(vecCol), PqIndex(subDim, books)).as("__enc"))
-      val triples = enc.select(explode(array((0 until m).map(s =>
-        struct(lit(s).as("s"),
-          element_at(col("__enc").getField("codes"), s + 1).as("code"),
-          slice(col(vecCol), s * subDim + 1, subDim).as("sv"))): _*)).as("e"))
+      // subspace as well.
+      val sliced = base.select((0 until m).map(s =>
+        slice(col(vecCol), s * subDim + 1, subDim).as(svCol(s))): _*)
+      val tabled = sliced.select((0 until m).map(s => col(svCol(s))) ++
+        (0 until m).map(s => denseD2Table(col(svCol(s)), books(s)).as(dtCol(s))): _*)
+      val triples = tabled.select(explode(array((0 until m).map(s =>
+        struct(lit(s).as("s"), argminCode(col(dtCol(s))).as("code"),
+          col(svCol(s)).as("sv"))): _*)).as("e"))
       val rows = triples
         .select(col("e.s").as("s"), col("e.code").as("code"),
           posexplode(col("e.sv")))
@@ -966,36 +935,6 @@ object Similarity {
   private def pqCodesFromTables(index: PqIndex) =
     array((0 until index.m).map(s => argminCode(col(dtCol(s)))): _*)
 
-  /** The padded per-subspace codebook matrices [[denseD2Table]] sweeps —
-    * one literal for the fused [[graft.functions.VectorExpressions.PqEncD]]
-    * kernel, padding gap labels with NaN rows EXACTLY like denseD2Table so
-    * fused codes index the same slots the query-side dense tables use.
-    */
-  private def pqMats(index: PqIndex): Seq[Seq[Seq[Double]]] =
-    index.codebooks.map { cents =>
-      val byLabel = cents.map(c => intLabel(c.label) -> c.vec).toMap
-      val subDim = cents.head.vec.size
-      (0 to byLabel.keys.max).map(l =>
-        byLabel.getOrElse(l, Seq.fill(subDim)(Double.NaN)))
-    }
-
-  /** Fused corpus-side PQ encode (guide §4 — one codegen'd kernel per row
-    * instead of m slices + m dense k-entry boxed tables + 2m table scans):
-    * `struct<codes, mind2>` per vector. Differentially pinned bit-identical
-    * to the sliced dense-table chain ([[withDenseTables]] +
-    * [[pqCodesFromTables]] + per-subspace `array_min`) in
-    * VectorExpressionsSpec, so stored codes and the oracle gates are
-    * unaffected. The QUERY side keeps its dense tables — ADC scoring needs
-    * the full table, and query batches are small by contract.
-    */
-  private def pqEncStruct(vec: org.apache.spark.sql.Column,
-                          index: PqIndex): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graft.CatalystBridge
-    CatalystBridge.column(graft.functions.VectorExpressions.PqEncD(
-      CatalystBridge.expression(vec),
-      CatalystBridge.expression(typedlit(pqMats(index)))))
-  }
-
   /** Encode every vector as its per-subspace nearest-centroid codes, plus
     * the total squared reconstruction error (the PQ quality audit).
     * Entirely map-side — the codebooks are plan-time literals; three
@@ -1005,14 +944,10 @@ object Similarity {
     */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                index: PqIndex): DataFrame = {
-    // r17 opt: fused kernel (see pqEncStruct). recon_d2 sums the
-    // per-subspace minima left-to-right in subspace order exactly as the
-    // dense-table form did (element_at is 1-based).
-    val enc = corpus.select(col(idCol), pqEncStruct(col(vecCol), index).as("__enc"))
-    enc.select(col(idCol),
-      col("__enc").getField("codes").as("codes"),
-      round((0 until index.m).map(s =>
-        element_at(col("__enc").getField("mind2"), s + 1)).reduce(_ + _), 6)
+    val tabled = withDenseTables(corpus, Seq(idCol), vecCol, index)
+    tabled.select(col(idCol),
+      pqCodesFromTables(index).as("codes"),
+      round((0 until index.m).map(s => array_min(col(dtCol(s)))).reduce(_ + _), 6)
         .as("recon_d2"))
   }
 
@@ -1106,11 +1041,13 @@ object Similarity {
       col(vecCol))
     val q = withDenseTables(probed, Seq("query_id", "cluster"), vecCol, pq)
     // Map-side projections only: codes + cluster together (no self-join);
-    // the code assignment is the fused pqEncStruct kernel — bit-identical
-    // to the dense-table definition pqEncode stores (r17 opt, guide §4).
-    val codes = corpus
-      .select(col(idCol).as("cand_id"), col(clusterCol).as("cluster"),
-        pqEncStruct(col(vecCol), pq).getField("codes").as("codes"))
+    // the code assignment is pqCodesFromTables — the same definition
+    // pqEncode stores.
+    val codes = withDenseTables(
+      corpus.select(col(idCol).as("cand_id"), col(clusterCol).as("cluster"),
+        col(vecCol)),
+      Seq("cand_id", "cluster"), vecCol, pq)
+      .select(col("cand_id"), col("cluster"), pqCodesFromTables(pq).as("codes"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_d2").asc, col("cand_id"))
     codes.join(broadcast(q), Seq("cluster"))
@@ -1134,8 +1071,10 @@ object Similarity {
     */
   def pqStoreWrite(corpus: DataFrame, idCol: String, vecCol: String,
                    clusterCol: String, pq: PqIndex, path: String): Unit = {
-    corpus.select(col(idCol), col(clusterCol).as("cluster"),
-        pqEncStruct(col(vecCol), pq).getField("codes").as("codes"))
+    val tabled = withDenseTables(
+      corpus.select(col(idCol), col(clusterCol).as("cluster"), col(vecCol)),
+      Seq(idCol, "cluster"), vecCol, pq)
+    tabled.select(col(idCol), col("cluster"), pqCodesFromTables(pq).as("codes"))
       .write.mode("overwrite").partitionBy("cluster").parquet(path)
   }
 

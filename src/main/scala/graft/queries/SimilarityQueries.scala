@@ -481,7 +481,7 @@ object SimilarityQueries {
 
     // SemDeDup-style semantic dedup: k-means co-membership candidates
     // (top-2 multi-assignment) + exact cosine verify — data-adaptive
-    // partitions vs cosinePairs' fixed LSH buckets.
+    // partitions vs the fixed LSH buckets of cosinePairsMultiTable.
     "dedup_semantic" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
       val idx = Similarity.kmeansFit(emb, "vec_id", "embedding", k = 5,
@@ -654,9 +654,8 @@ object SimilarityQueries {
     },
 
     // Embedding-cosine near-duplicate mining via the AND-OR multi-table
-    // miner — the bounded-occupancy default (the fixed-bucket single-table
-    // cosinePairs measured 46× runtime at 10× rows, SCALE.md; it remains
-    // available for ≲10⁴-vector corpora and verification cohorts).
+    // miner — the bounded-occupancy default (a fixed-bucket single table
+    // measured 46× runtime at 10× rows, SCALE.md).
     // (This corpus has no planted vector dups, so the threshold is low
     // enough to yield pairs; SimilaritySpec covers the ≥0.95 dup case.)
     "dedup_embedding_cosine" -> { (s, dir) =>

@@ -47,9 +47,9 @@ object TextQueries {
     s"""docs_skewed AS (SELECT doc_id,
        |  CASE WHEN doc_id % 5 = 0 THEN '$HotText' ELSE text END AS text
        |  FROM documents)""".stripMargin
-  // LEGACY fixed-banding signature (single md5, 4 chunk permutations,
-  // r = 1): kept ONLY for the dedup_minhash_lsh gate, which pins the
-  // explicit-override path (nearDuplicates(bands = Some(b))).
+  // Fixed-banding signature (single md5, 4 chunk permutations, r = 1):
+  // the oracle for the dedup_minhash_lsh gate, which calls
+  // Dedup.minhashSignatures directly.
   private[queries] def sigCte(src: String) =
     s"""sig AS (SELECT doc_id, b, min(substr(md5(shingle), 1 + 8*b, 8)) AS minhash
        |  FROM $src, (SELECT unnest(range(4)) AS b) bands GROUP BY doc_id, b)""".stripMargin

@@ -20,8 +20,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (`stream_sim.py:15-83`: serve batches of N distinct event timestamps,
   * seek via start_time, wrap-around at end of data) as a DataSourceV2
   * `MicroBatchStream`, so the seek/pace semantics run under the engine's
-  * own offset tracking, checkpointing, trigger loop and admission control
-  * instead of the [[Replay.cursorBatches]] iterator harness.
+  * own offset tracking, checkpointing, trigger loop and admission control.
   *
   * Usage:
   * {{{
@@ -44,7 +43,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * ("1 simulated hour per N wall seconds", reference `viz.py:583`) composes
   * from two knobs: simulated time per trigger here
   * (`simAdvancePerTriggerSec`), wall time per trigger via the query's
-  * `Trigger.ProcessingTime` (use [[Replay.paceMillis]] to derive it).
+  * `Trigger.ProcessingTime` (`simAdvancePerTriggerSec / 3600` × the wall
+  * seconds per simulated hour).
   * Admission control maps `ReadMaxRows` onto the cursor (max distinct
   * timestamps per batch — row counts per slice are executor-side knowledge)
   * and serves everything remaining under `Trigger.AvailableNow`'s

@@ -44,20 +44,6 @@ object StreamAdmission {
           .as("admitted"))
   }
 
-  /** The micro-batch filtered to rows of admitted sources: a broadcast
-    * left-semi join on the |sources|-bounded verdict frame — per-batch
-    * cost is one pass over the batch plus one over the reference (for the
-    * PSI bins), with no per-document state.
-    */
-  def admit(batch: DataFrame, reference: DataFrame, groupCol: String,
-            valueCol: String, quality: Column, minWilsonLo: Double,
-            maxPsi: Double, bins: Int = 10): DataFrame = {
-    val ok = admissionReport(batch, reference, groupCol, valueCol, quality,
-        minWilsonLo, maxPsi, bins)
-      .filter(col("admitted")).select(col(groupCol))
-    batch.join(broadcast(ok), Seq(groupCol), "left_semi")
-  }
-
   /** [[admissionReport]] with the drift arm swapped to the binning-free
     * two-snapshot KS statistic (curation v7's streaming form): per
     * source, D = sup |ECDF_ref − ECDF_batch| over `valueCol`. No binning
@@ -70,9 +56,9 @@ object StreamAdmission {
     * where the statistic is undefined) reads as MAXIMAL drift: `ks`
     * coalesces to 1.0 and `admitted` is an explicit `false`, never a
     * tri-state NULL — matching the PSI arm, where absence shows up as
-    * high PSI against the dense grid. `admit` filtered NULLs out anyway;
-    * this makes the REPORT say the same thing to a consumer reading the
-    * boolean.
+    * high PSI against the dense grid. [[admit]] would filter NULLs out
+    * anyway; this makes the REPORT say the same thing to a consumer
+    * reading the boolean.
     */
   def admissionReportKs(batch: DataFrame, reference: DataFrame,
                         groupCol: String, valueCol: String, quality: Column,
@@ -85,16 +71,6 @@ object StreamAdmission {
       .select(col(groupCol), col("n"), col("wilson_lo"), col("ks"),
         coalesce(col("wilson_lo") >= minWilsonLo && col("ks") <= maxKs,
           lit(false)).as("admitted"))
-  }
-
-  /** [[admit]] under the KS drift arm. */
-  def admitKs(batch: DataFrame, reference: DataFrame, groupCol: String,
-              valueCol: String, quality: Column, minWilsonLo: Double,
-              maxKs: Double): DataFrame = {
-    val ok = admissionReportKs(batch, reference, groupCol, valueCol,
-        quality, minWilsonLo, maxKs)
-      .filter(col("admitted")).select(col(groupCol))
-    batch.join(broadcast(ok), Seq(groupCol), "left_semi")
   }
 
   /** [[admissionReport]] with the drift arm swapped to CATEGORICAL
@@ -123,16 +99,6 @@ object StreamAdmission {
       .select(col(groupCol), col("n"), col("wilson_lo"), col("js"),
         coalesce(col("wilson_lo") >= minWilsonLo && col("js") <= maxJs,
           lit(false)).as("admitted"))
-  }
-
-  /** [[admit]] under the JS categorical drift arm. */
-  def admitJs(batch: DataFrame, reference: DataFrame, groupCol: String,
-              catCol: String, quality: Column, minWilsonLo: Double,
-              maxJs: Double): DataFrame = {
-    val ok = admissionReportJs(batch, reference, groupCol, catCol,
-        quality, minWilsonLo, maxJs)
-      .filter(col("admitted")).select(col(groupCol))
-    batch.join(broadcast(ok), Seq(groupCol), "left_semi")
   }
 
   /** [[admissionReport]] with the drift arm swapped to EMBEDDING-SPACE
@@ -166,17 +132,6 @@ object StreamAdmission {
           col("centroid_cosine") >= minCentroidCos &&
           abs(col("norm_ratio") - 1.0) <= maxNormDelta,
           lit(false)).as("admitted"))
-  }
-
-  /** [[admit]] under the embedding drift arm. */
-  def admitEmbedding(batch: DataFrame, reference: DataFrame,
-                     groupCol: String, vecCol: String, quality: Column,
-                     minWilsonLo: Double, minCentroidCos: Double,
-                     maxNormDelta: Double): DataFrame = {
-    val ok = admissionReportEmbedding(batch, reference, groupCol, vecCol,
-        quality, minWilsonLo, minCentroidCos, maxNormDelta)
-      .filter(col("admitted")).select(col(groupCol))
-    batch.join(broadcast(ok), Seq(groupCol), "left_semi")
   }
 
   /** The FOUR-ARM admission datacard per micro-batch — the streaming
@@ -231,17 +186,15 @@ object StreamAdmission {
           lit(false)).as("admitted"))
   }
 
-  /** [[admit]] under the full four-arm datacard verdict. */
-  def admitDatacard(batch: DataFrame, reference: DataFrame,
-                    groupCol: String, valueCol: String, catCol: String,
-                    vecCol: String, quality: Column, minWilsonLo: Double,
-                    maxPsi: Double, maxKs: Double, maxJs: Double,
-                    minCentroidCos: Double, maxNormDelta: Double,
-                    bins: Int = 10): DataFrame = {
-    val ok = admissionDatacard(batch, reference, groupCol, valueCol,
-        catCol, vecCol, quality, minWilsonLo, maxPsi, maxKs, maxJs,
-        minCentroidCos, maxNormDelta, bins)
-      .filter(col("admitted")).select(col(groupCol))
-    batch.join(broadcast(ok), Seq(groupCol), "left_semi")
-  }
+  /** The micro-batch filtered to rows of the sources a verdict frame
+    * admits — `report` is any `admissionReport*` / [[admissionDatacard]]
+    * output (a `groupCol` and a non-null boolean `admitted` per source).
+    * A broadcast left-semi join on the |sources|-bounded verdict frame:
+    * per-batch cost is the report's own passes plus one over the batch,
+    * with no per-document state.
+    */
+  def admit(batch: DataFrame, report: DataFrame,
+            groupCol: String): DataFrame =
+    batch.join(broadcast(report.filter(col("admitted")).select(col(groupCol))),
+      Seq(groupCol), "left_semi")
 }

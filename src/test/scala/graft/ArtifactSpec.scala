@@ -358,6 +358,39 @@ class ArtifactSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.size <= before)
   }
 
+  test("OpCaches.scoped re-caches after a bare clearCache; a live equal cache registers nothing") {
+    import org.apache.spark.storage.StorageLevel
+    OpCaches.releaseAll(blocking = true)
+    def frame = (1 to 50).map(i => (i.toLong, i * 2.0)).toDF("id", "v")
+      .filter(col("v") > 10.0)
+    val first = OpCaches.scoped(frame)
+    assert(first.storageLevel != StorageLevel.NONE)
+    val n = OpCaches.registered
+    // The streaming admission loop's case: an equal frame re-derived while
+    // the cache is live reads that cache and registers nothing new.
+    val again = OpCaches.scoped(frame)
+    assert(again.storageLevel != StorageLevel.NONE)
+    assert(OpCaches.registered == n, "a live equal cache must not re-register")
+    // A bare clearCache drops the cache behind the registry's back; the
+    // next scoped call on an equal frame must cache it again.
+    spark.catalog.clearCache()
+    assert(frame.storageLevel == StorageLevel.NONE)
+    val recached = OpCaches.scoped(frame)
+    assert(recached.storageLevel != StorageLevel.NONE,
+      "scoped after clearCache must return a cached frame")
+    OpCaches.releaseAll(blocking = true)
+    assert(frame.storageLevel == StorageLevel.NONE)
+    // A caller-owned cache of an equal plan is never registered, so
+    // releaseAll leaves it alone.
+    val owned = frame.cache()
+    try {
+      OpCaches.scoped(frame)
+      assert(OpCaches.registered == 0)
+      OpCaches.releaseAll(blocking = true)
+      assert(owned.storageLevel != StorageLevel.NONE)
+    } finally owned.unpersist(blocking = true)
+  }
+
   test("releaseAll frees rank-op localCheckpoint blocks (not just caches)") {
     // The rank/prefix-sum family checkpoints its range-partitioned frame
     // (lineage truncation — a released cache would silently re-sample

@@ -244,18 +244,18 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("multi-table cosine pairs recover at least the single-table pairs") {
-    // Table 0 of the AND-OR construction hashes the SAME planes as the
-    // single-table op (offset 0), so its candidates — and therefore the
-    // verified pairs — are a superset at equal planes. The extra tables
-    // only ever ADD recall.
+    // Table 0 of the AND-OR construction hashes the SAME planes at any
+    // table count (offset 0), so tables = 3 mines a superset of the
+    // tables = 1 candidates — and therefore of the verified pairs — at
+    // equal planes. The extra tables only ever ADD recall.
     val emb = Seq.tabulate(40) { i =>
       (i.toLong, Array.tabulate(8)(j =>
         (math.sin(i * 17 + j * 3) + (if (i % 7 == 0) 2.0 else 0.0)).toFloat))
     }.toDF("vec_id", "embedding")
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val single = pairSet(Similarity.cosinePairs(emb, "vec_id", "embedding",
-      threshold = 0.5, planes = 3, dims = 8))
+    val single = pairSet(Similarity.cosinePairsMultiTable(emb, "vec_id",
+      "embedding", threshold = 0.5, planes = 3, tables = 1, dims = 8))
     val multi = pairSet(Similarity.cosinePairsMultiTable(emb, "vec_id",
       "embedding", threshold = 0.5, planes = 3, tables = 3, dims = 8))
     assert(single.subsetOf(multi),

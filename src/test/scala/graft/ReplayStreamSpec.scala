@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.ReplayStreamSource
 
 /** The replay source must honor the simulator contract
-  * ([[graft.streaming.Replay]] mirrors `stream_sim.py`) under the real
+  * (`stream_sim.py`: batches of N distinct timestamps) under the real
   * Structured Streaming engine: batch granularity, seek, wrap-around, and
   * time-based batching — and each micro-batch must be a REAL distributed
   * parquet scan with the event-time predicate pushed down (the driver

@@ -103,18 +103,6 @@ class StreamingSpec extends AnyFunSuite {
       row.toString)
   }
 
-  test("seek with wrap replays the pre-seek prefix after the tail (stream_sim wrap)") {
-    val df = batches.flatten.toDF("userId", "tsUs", "value")
-      .withColumn("ts", timestamp_micros(col("tsUs")))
-    val wrapped = graft.streaming.Replay.cursorBatches(df, "ts", batchSize = 1,
-      startTime = Some("1970-01-01 00:02:00"), wrap = true).toSeq
-    // 5 distinct timestamps total; seek keeps {2,90,200}min then wraps to {0,1}.
-    assert(wrapped.size == 5)
-    assert(wrapped.map(_.count()).sum == df.count())
-    val firstTs = wrapped.head.select(min(col("ts"))).head().getTimestamp(0)
-    assert(firstTs.getTime == 2L * 60 * 1000)
-  }
-
   test("foreachBatch bundle sink matches the batch engine after every batch") {
     import org.apache.spark.sql.{Dataset, Row}
     import graft.model.{AllUsers, ByIds, QuerySpec}
@@ -674,19 +662,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(weights(s2) == weights(s1), s"pre=${weights(s2)} body=${weights(s1)}")
   }
 
-  test("cursor replay mirrors the simulator's distinct-timestamp batches (O3)") {
-    val df = batches.flatten.toDF("userId", "tsUs", "value")
-      .withColumn("ts", timestamp_micros(col("tsUs")))
-    val got = graft.streaming.Replay.cursorBatches(df, "ts", batchSize = 2).toSeq
-    // 5 distinct timestamps → 3 batches (2+2+1).
-    assert(got.map(_.count()).sum == df.count())
-    assert(got.size == 3)
-    // Seek: start at minute 2 → timestamps {2, 90, 200} min → 2 batches.
-    val sought = graft.streaming.Replay.cursorBatches(df, "ts", batchSize = 2,
-      startTime = Some("1970-01-01 00:02:00")).toSeq
-    assert(sought.size == 2 && sought.map(_.count()).sum == 3)
-  }
-
   test("streaming funnel equals batch funnel for any contiguous ordered split") {
     import graft.streaming.StreamFunnel
     import graft.streaming.StreamFunnel.{StageEvent, FunnelProgress, FunnelState}
@@ -1112,8 +1087,10 @@ class StreamingSpec extends AnyFunSuite {
     val splits = Seq(batch1, batch2)
 
     def admitBatch(df: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamAdmission.admit(df, reference, "source",
-        "n_chars", col("n_chars") > 50, minWilsonLo = 0.5, maxPsi = 1.0)
+      graft.streaming.StreamAdmission.admit(df,
+        graft.streaming.StreamAdmission.admissionReport(df, reference, "source",
+          "n_chars", col("n_chars") > 50, minWilsonLo = 0.5, maxPsi = 1.0),
+        "source")
 
     val input = MemoryStream[(String, String, Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, Long, String)]],
@@ -1180,21 +1157,24 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(rep1("b")._1 == 1.0 && !rep1("b")._2, rep1.toString)
     assert(rep1("a")._2 && !rep1("c")._2, rep1.toString)
-    val adm2 = graft.streaming.StreamAdmission.admitKs(
-        batch2.toDF("source", "doc_id", "n_chars", "text"), reference,
-        "source", "n_chars", col("n_chars") > 50,
-        minWilsonLo = 0.5, maxKs = 0.4)
+    val batch2Df = batch2.toDF("source", "doc_id", "n_chars", "text")
+    val adm2 = graft.streaming.StreamAdmission.admit(batch2Df,
+      graft.streaming.StreamAdmission.admissionReportKs(batch2Df, reference,
+        "source", "n_chars", col("n_chars") > 50, minWilsonLo = 0.5,
+        maxKs = 0.4), "source")
       .select("doc_id").as[String].collect().toSet
     assert(adm2 == batch2.map(_._2).toSet, s"batch-2 all re-admitted: $adm2")
     graft.ops.OpCaches.releaseAll()
 
     // Full ordered-splits parity for the KS arm, mirroring the PSI loop:
-    // stream foreachBatch (admitKs -> novelty -> accumulate store) must
-    // equal the per-split batch recompute, and the one batch-2 re-ingest
-    // must pass admission yet drop at the novelty gate.
+    // stream foreachBatch (admit on the KS report -> novelty -> accumulate
+    // store) must equal the per-split batch recompute, and the one batch-2
+    // re-ingest must pass admission yet drop at the novelty gate.
     def admitKsBatch(df: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamAdmission.admitKs(df, reference, "source",
-        "n_chars", col("n_chars") > 50, minWilsonLo = 0.5, maxKs = 0.4)
+      graft.streaming.StreamAdmission.admit(df,
+        graft.streaming.StreamAdmission.admissionReportKs(df, reference, "source",
+          "n_chars", col("n_chars") > 50, minWilsonLo = 0.5, maxKs = 0.4),
+        "source")
     val input2 = MemoryStream[(String, String, Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, Long, String)]],
       spark)
@@ -1301,11 +1281,13 @@ class StreamingSpec extends AnyFunSuite {
     assert(rep2("b")._2 && rep2("c")._2, rep2.toString)
 
     // Full ordered-splits parity, mirroring the KS arm's loop: stream
-    // foreachBatch (admitJs -> novelty -> accumulate store) must equal
-    // the per-split batch recompute.
+    // foreachBatch (admit on the JS report -> novelty -> accumulate store)
+    // must equal the per-split batch recompute.
     def admitJsBatch(df: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamAdmission.admitJs(df, reference, "source",
-        "lang", col("n_chars") > 50, minWilsonLo = 0.5, maxJs = 0.2)
+      graft.streaming.StreamAdmission.admit(df,
+        graft.streaming.StreamAdmission.admissionReportJs(df, reference, "source",
+          "lang", col("n_chars") > 50, minWilsonLo = 0.5, maxJs = 0.2),
+        "source")
     val input = MemoryStream[(String, String, String, Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, String, Long, String)]],
       spark)
@@ -1398,9 +1380,11 @@ class StreamingSpec extends AnyFunSuite {
 
     // Ordered-splits parity (same loop shape as the KS/JS arms).
     def admitEmbBatch(df: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamAdmission.admitEmbedding(df, reference,
-        "source", "emb", col("n_chars") > 50, minWilsonLo = 0.5,
-        minCentroidCos = 0.8, maxNormDelta = 0.2)
+      graft.streaming.StreamAdmission.admit(df,
+        graft.streaming.StreamAdmission.admissionReportEmbedding(df, reference,
+          "source", "emb", col("n_chars") > 50, minWilsonLo = 0.5,
+          minCentroidCos = 0.8, maxNormDelta = 0.2),
+        "source")
     val input = MemoryStream[(String, String, Seq[Double], Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, Seq[Double], Long, String)]],
       spark)
@@ -1515,11 +1499,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(!rep("lowq").getAs[Boolean]("admitted"))
     assert(rep("lowq").getAs[Double]("wilson_lo") < 0.5, rep("lowq").toString)
 
-    // admitDatacard keeps exactly the healthy source's documents.
-    val adm = graft.streaming.StreamAdmission.admitDatacard(
-        batch, reference, "source", "n_chars", "lang", "emb",
-        col("n_chars") > 50, minWilsonLo = 0.5, maxPsi = 1.0, maxKs = 0.4,
-        maxJs = 0.2, minCentroidCos = 0.8, maxNormDelta = 0.2)
+    // admit on the datacard verdict keeps exactly the healthy source's
+    // documents.
+    val adm = graft.streaming.StreamAdmission.admit(batch,
+        graft.streaming.StreamAdmission.admissionDatacard(
+          batch, reference, "source", "n_chars", "lang", "emb",
+          col("n_chars") > 50, minWilsonLo = 0.5, maxPsi = 1.0, maxKs = 0.4,
+          maxJs = 0.2, minCentroidCos = 0.8, maxNormDelta = 0.2),
+        "source")
       .select("source").distinct().as[String].collect().toSet
     graft.ops.OpCaches.releaseAll()
     assert(adm == Set("ok"), s"only the healthy source survives: $adm")

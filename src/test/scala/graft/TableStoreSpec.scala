@@ -99,8 +99,8 @@ class TableStoreSpec extends AnyFunSuite {
       (2L, Array(0.6f, 0.8f, 0.001f)), // near-identical to 1
       (3L, Array(-0.9f, 0.1f, 0.4f))
     ).toDF("vec_id", "embedding")
-    val pairs = graft.ops.Similarity.cosinePairs(emb, "vec_id", "embedding",
-      threshold = 0.95, planes = 2, dims = 3)
+    val pairs = graft.ops.Similarity.cosinePairsMultiTable(emb, "vec_id",
+      "embedding", threshold = 0.95, planes = 2, tables = 1, dims = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }

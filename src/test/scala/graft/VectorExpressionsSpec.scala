@@ -202,78 +202,4 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .agg(sum(col("d"))).head().getDouble(0)
     assert(sum1 == sum2)
   }
-
-  test("pq_enc_d is bit-identical to the sliced dense-table chain") {
-    import org.apache.spark.sql.graft.CatalystBridge
-    import graft.functions.VectorExpressions
-    // m=3 subspaces × ragged k (4/3/4 codes), subDim=4; book 1 has a
-    // duplicate centroid (argmin tie → FIRST index must win, matching
-    // array_position) and book 2 a NaN-padded gap row like denseD2Table
-    // emits for dead labels.
-    val subDim = 4
-    val mats: Seq[Seq[Seq[Double]]] = Seq(
-      Seq(Seq(0.0, 0.1, 0.2, 0.3), Seq(1.0, 1.1, 1.2, 1.3),
-        Seq(0.0, 0.1, 0.2, 0.3), Seq(-0.5, 0.5, -0.5, 0.5)),
-      Seq(Seq(0.2, 0.2, 0.2, 0.2), Seq(0.2, 0.2, 0.2, 0.2),
-        Seq(2.0, -2.0, 2.0, -2.0)),
-      Seq(Seq(0.9, 0.8, 0.7, 0.6), Seq.fill(subDim)(Double.NaN),
-        Seq(0.1, 0.1, 0.1, 0.1), Seq(0.0, 0.0, 0.0, 0.0)))
-    val m = mats.size
-    // Row zoo: normal, exact-tie vector, null vec, short vec (slices run
-    // out → null codes for the tail subspaces), vec with a null element
-    // (nulls every subspace containing it), extra-long vec (tail ignored).
-    val rows = Seq(
-      Some((0 until 12).map(i => i * 0.07 - 0.3)),
-      Some(Seq(0.0, 0.1, 0.2, 0.3, 0.2, 0.2, 0.2, 0.2, 0.1, 0.1, 0.1, 0.1)),
-      None,
-      Some(Seq(1.0, 2.0, 3.0, 4.0, 5.0)),
-      Some((0 until 14).map(i => math.sin(i.toDouble))))
-    val base = rows.toDF("v")
-    val withNullElem = spark.sql(
-      "SELECT array(CAST(0.1 AS DOUBLE), CAST(NULL AS DOUBLE), 0.2D, 0.3D," +
-        " 0.1D, 0.1D, 0.1D, 0.1D, 0.0D, 0.0D, 0.0D, 0.0D) AS v")
-    val df = base.unionByName(withNullElem)
-    val fused = CatalystBridge.column(VectorExpressions.PqEncD(
-      CatalystBridge.expression(col("v")),
-      CatalystBridge.expression(typedlit(mats))))
-    // Reference: the exact chain the kernel fuses, built from the already
-    // differentially-pinned l2sq_table_d plus array_min/array_position.
-    val dted = df.select(col("v") +: (0 until m).map(s =>
-      CatalystBridge.column(VectorExpressions.L2SqTableD(
-        CatalystBridge.expression(slice(col("v"), s * subDim + 1, subDim)),
-        CatalystBridge.expression(typedlit(mats(s))))).as(s"dt_$s")): _*)
-    val ref = dted.select(
-      array((0 until m).map(s =>
-        (array_position(col(s"dt_$s"), array_min(col(s"dt_$s"))) - 1)
-          .cast("int")): _*).as("codes"),
-      array((0 until m).map(s => array_min(col(s"dt_$s"))): _*).as("mind2"))
-    val got = df.select(fused.getField("codes").as("codes"),
-      fused.getField("mind2").as("mind2"))
-    val plan = got.queryExecution.executedPlan.toString
-    assert("""\*\(\d+\) Project""".r.findFirstIn(plan).isDefined &&
-      plan.contains("pq_enc_d"), plan.take(600))
-    val g = got.collect().map(r => (r.getSeq[Any](0), r.getSeq[Any](1)))
-    val r = ref.collect().map(r => (r.getSeq[Any](0), r.getSeq[Any](1)))
-    assert(g.length == r.length)
-    g.zip(r).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a._1 == b._1, s"codes mismatch on row $i: ${a._1} vs ${b._1}")
-      // Compare doubles bitwise (incl. nulls) — the oracle compare is exact.
-      assert(a._2.map(x => if (x == null) null
-          else java.lang.Double.doubleToLongBits(x.asInstanceOf[Double])) ==
-        b._2.map(x => if (x == null) null
-          else java.lang.Double.doubleToLongBits(x.asInstanceOf[Double])),
-        s"mind2 mismatch on row $i: ${a._2} vs ${b._2}")
-    }
-    // Interpreted-eval path (expression.eval) must agree with codegen.
-    val gotInterp = df.select(fused.getField("codes").as("codes"))
-    val before = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val gi = gotInterp.collect().map(_.getSeq[Any](0))
-      assert(gi.toSeq == g.map(_._1).toSeq, "interpreted != codegen")
-    } finally before match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.factoryMode", v)
-      case None => spark.conf.unset("spark.sql.codegen.factoryMode")
-    }
-  }
 }
