@@ -330,12 +330,12 @@ object Bench {
             maxNormDelta = 0.3)
           maxReportRows = math.max(maxReportRows, rep.count())
           rows += b.count()
-          // The REFERENCE is pinned across batches (driftDatacard
-          // scope-caches the same frame object, so batch 2+ reads the
-          // cached snapshot — the production pattern for a stream-static
-          // reference); the per-batch cur caches are released once after
-          // the stream stops. Releasing per batch would re-scan the
-          // reference 16 times and time the cache churn, not the op.
+          // The REFERENCE is pinned across batches: its drift profile is
+          // the only scoped cache, so batch 2+ reads it from cache (the
+          // production pattern for a stream-static reference), and it is
+          // released once after the stream stops. Releasing per batch
+          // would re-scan the reference every batch and time the cache
+          // churn, not the op.
           ()
         }
         .start()

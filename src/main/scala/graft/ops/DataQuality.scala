@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import graft.functions.VectorFunctions.normD
 
 /** Dataset-quality auditing: referential-integrity orphan counts,
   * Benford first-digit screening, and proportion confidence intervals —
@@ -131,20 +133,27 @@ object DataQuality {
   def wilsonShare(df: DataFrame, groupCol: String,
                   success: org.apache.spark.sql.Column,
                   z: Double = 1.96): DataFrame = {
-    val agged = df.groupBy(col(groupCol))
+    val (share, lo, hi) = wilsonBounds(col("n"), col("successes"), z)
+    df.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"),
         sum(when(success, 1L).otherwise(0L)).as("successes"))
-    val n = col("n").cast("double")
-    val p = col("successes").cast("double") / n
+      .select(col(groupCol), col("n"), col("successes"), share.as("share"),
+        lo.as("wilson_lo"), hi.as("wilson_hi"))
+  }
+
+  /** (share, wilson_lo, wilson_hi) at 6 dp from a row count and a
+    * success count — the arithmetic of [[wilsonShare]]. */
+  private[graft] def wilsonBounds(rows: Column, successes: Column,
+                                  z: Double = 1.96): (Column, Column, Column) = {
+    val n = rows.cast("double")
+    val p = successes.cast("double") / n
     val z2 = lit(z * z)
     val denom = lit(1.0) + z2 / n
     val center = p + z2 / (lit(2.0) * n)
     val spread = lit(z) * sqrt(p * (lit(1.0) - p) / n +
       z2 / (lit(4.0) * n * n))
-    agged.select(col(groupCol), col("n"), col("successes"),
-      round(p, 6).as("share"),
-      round((center - spread) / denom, 6).as("wilson_lo"),
-      round((center + spread) / denom, 6).as("wilson_hi"))
+    (round(p, 6), round((center - spread) / denom, 6),
+      round((center + spread) / denom, 6))
   }
 
   /** One keyed table to audit for primary-key uniqueness. */
@@ -296,55 +305,144 @@ object DataQuality {
 
   /** UNIFIED DRIFT DATACARD (L300): per group, all four drift statistics
     * of the family from the same two snapshots — `psi` (binned numeric,
-    * [[Stats.psiByGroup]]), `ks` (binning-free numeric,
-    * [[Stats.ksByGroup]]), `js` (categorical, [[Stats.jsByGroup]]) and
-    * `centroid_cosine`/`norm_ratio` (vector,
-    * [[EmbeddingEval.embeddingDriftByGroup]]) — the report a 100 TB
-    * operator actually reads after an ingest: one row per source, every
-    * modality of "did this source change since yesterday" side by side.
+    * [[Stats.psiOf]]), `ks` (binning-free numeric, [[Stats.ksOf]]), `js`
+    * (categorical, [[Stats.jsOf]]) and `centroid_cosine`/`norm_ratio`
+    * (vector, [[EmbeddingEval.centroidCosine]]/[[EmbeddingEval.normRatio]])
+    * — the report a 100 TB operator actually reads after an ingest: one
+    * row per source, every modality of "did this source change since
+    * yesterday" side by side. Values equal the single-arm ops
+    * ([[Stats.psiByGroup]], [[Stats.ksByGroup]], [[Stats.jsByGroup]],
+    * [[EmbeddingEval.embeddingDriftByGroup]]) joined full-outer.
     *
-    * Scale shape: BOTH snapshots are scope-cached here and every
-    * component op reads the cached scan, so the corpus is scanned once
-    * per side (plus psiByGroup's 1-row edge aggregate) rather than once
-    * per statistic; everything downstream of the component aggregations
-    * is |groups|-, (groups × bins)-, (groups × categories)- or
-    * (groups × dims)-bounded, and the final assembly joins four
-    * |groups|-bounded frames full-outer (a group present in only one
-    * component frame — e.g. all-null numerics but a live category mix —
-    * still reports). Output columns: `groupCol`, `n_ref`/`n_cur`
-    * (non-null `valueCol` row counts from the KS pass), `psi`, `ks`,
-    * `js_n_ref`/`js_n_cur` (non-null `catCol` row counts from the JS
-    * pass — the JS arm's OWN evidence, so a consumer gating `js` never
-    * clobbers a live categorical signal when the numeric column is
-    * all-null), `js`, `centroid_cosine`, `norm_ratio`.
+    * Scale shape: each snapshot is scanned ONCE into a per-group profile
+    * ([[driftProfile]]); the reference profile is scope-cached (the only
+    * scoped cache, so a stream-static caller re-deriving the same
+    * reference reads it from cache), its two PSI edges are collected as
+    * literals, and the two |groups|-row profiles join full-outer once
+    * and finish in one projection. A group reports when any arm has
+    * evidence on either side. Output columns: `groupCol`,
+    * `n_ref`/`n_cur` (non-null `valueCol` rows), `psi`, `ks`,
+    * `js_n_ref`/`js_n_cur` (non-null `catCol` rows — the JS arm's OWN
+    * evidence, so a consumer gating `js` never clobbers a live
+    * categorical signal when the numeric column is all-null), `js`,
+    * `centroid_cosine`, `norm_ratio`.
     */
   def driftDatacard(ref: DataFrame, cur: DataFrame, groupCol: String,
                     valueCol: String, catCol: String, vecCol: String,
-                    bins: Int = 10): DataFrame = {
-    val r = OpCaches.scoped(ref)
-    val c = OpCaches.scoped(cur)
-    Stats.ksByGroup(r, c, valueCol, groupCol)
-      .join(Stats.psiByGroup(r, c, valueCol, groupCol, bins),
-        Seq(groupCol), "full_outer")
-      .join(Stats.jsByGroup(r, c, catCol, groupCol)
-        // Carry the JS arm's OWN evidence counts (non-null categorical
-        // rows) — n_ref/n_cur above count non-null NUMERIC rows, and a
-        // consumer gating js on the KS counts would clobber a live
-        // categorical signal whenever the numeric column is all-null
-        // (round-14 advice #2).
-        .select(col(groupCol), col("n_ref").as("js_n_ref"),
-          col("n_cur").as("js_n_cur"), col("js")),
-        Seq(groupCol), "full_outer")
-      .join(EmbeddingEval.embeddingDriftByGroup(r, c, vecCol, groupCol)
-        .select(col(groupCol), col("centroid_cosine"), col("norm_ratio")),
-        Seq(groupCol), "full_outer")
-      .select(col(groupCol),
-        coalesce(col("n_ref"), lit(0L)).as("n_ref"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"),
-        col("psi"), col("ks"),
-        coalesce(col("js_n_ref"), lit(0L)).as("js_n_ref"),
-        coalesce(col("js_n_cur"), lit(0L)).as("js_n_cur"),
-        col("js"),
-        col("centroid_cosine"), col("norm_ratio"))
+                    bins: Int = 10): DataFrame =
+    driftCard(ref, cur, groupCol, valueCol, catCol, vecCol, bins, lit(false))
+      .drop("n", "successes")
+
+  /** [[driftDatacard]] plus the current side's row count `n` and its
+    * `success` count `successes` (null for a group absent from `cur`) —
+    * the admission datacard's Wilson inputs, from the same scan. */
+  private[graft] def driftCard(ref: DataFrame, cur: DataFrame, groupCol: String,
+                               valueCol: String, catCol: String, vecCol: String,
+                               bins: Int, success: Column): DataFrame = {
+    require(bins > 0, "bins must be positive")
+    val r = OpCaches.scoped(driftProfile(ref, groupCol, valueCol, catCol,
+      vecCol, lit(false), "ref"))
+    // Fixed-width PSI edges over every non-null reference value (null
+    // groups included): the per-group extremes are collected (|groups|
+    // rows) and folded into two doubles, applied as literals to both
+    // sides. `Double.compare` orders NaN last, as Spark does; the cells
+    // hold no -0.0 (grouping normalizes it).
+    val extremes = r.select(array_min(transform(col("num_ref"), _.getField("k"))),
+      array_max(transform(col("num_ref"), _.getField("k")))).collect()
+    def edge(i: Int, keep: Int => Boolean) = lit(extremes
+      .filterNot(_.isNullAt(i)).map(_.getDouble(i))
+      .reduceOption((a, b) => if (keep(java.lang.Double.compare(a, b))) a else b)
+      .map(Double.box).orNull).cast("double")
+    val (lo, hi) = (edge(0, _ <= 0), edge(1, _ >= 0))
+    def binned(cells: Column) = Stats.binCounts(cells,
+      Stats.fixedWidthBin(_, lo, hi, bins), bins)
+    def total(c: String) = coalesce(col(c), lit(0L))
+    val c = driftProfile(cur, groupCol, valueCol, catCol, vecCol, success, "cur")
+    r.join(c, Seq(groupCol), "full_outer")
+      .filter(col(groupCol).isNotNull && (total("num_n_ref") +
+        total("num_n_cur") + total("cat_n_ref") + total("cat_n_cur") > 0 ||
+        col("centroid_ref").isNotNull || col("centroid_cur").isNotNull))
+      // Totals and bin vectors in their own projection: the statistics
+      // below read each of them more than once.
+      .select(col(groupCol), total("num_n_ref").as("n_ref"),
+        total("num_n_cur").as("n_cur"), total("cat_n_ref").as("js_n_ref"),
+        total("cat_n_cur").as("js_n_cur"), col("num_ref"), col("num_cur"),
+        binned(col("num_ref")).as("bins_ref"),
+        binned(col("num_cur")).as("bins_cur"), col("cat_ref"), col("cat_cur"),
+        col("centroid_ref"), col("centroid_cur"), col("norm_ref"),
+        col("norm_cur"), col("rows_cur").as("n"),
+        col("successes_cur").as("successes"))
+      .select(col(groupCol), col("n_ref"), col("n_cur"),
+        when(col("n_ref") + col("n_cur") > 0,
+          Stats.psiOf(col("bins_ref"), col("bins_cur"), bins)).as("psi"),
+        Stats.ksOf(col("num_ref"), col("num_cur"), col("n_ref"), col("n_cur"))
+          .as("ks"),
+        col("js_n_ref"), col("js_n_cur"),
+        when(col("js_n_ref") + col("js_n_cur") > 0,
+          Stats.jsOf(col("cat_ref"), col("cat_cur"), col("js_n_ref"),
+            col("js_n_cur"))).as("js"),
+        EmbeddingEval.centroidCosine(col("centroid_ref"), col("centroid_cur"))
+          .as("centroid_cosine"),
+        EmbeddingEval.normRatio(col("norm_ref"), col("norm_cur")).as("norm_ratio"),
+        col("n"), col("successes"))
+  }
+
+  /** One snapshot's per-group drift profile in one scan: every row
+    * explodes into keyed cells — its value, its category, one per vector
+    * component, and the row itself — and a two-level aggregation folds
+    * them into one row per group (null group included). Columns, each
+    * suffixed `_side`:
+    *   - `num`: sorted (value, count) cells of non-null `valueCol`, and
+    *     `num_n` their total;
+    *   - `cat`: sorted (category, count) cells of non-null `catCol`, and
+    *     `cat_n` their total;
+    *   - `centroid`: per-component means at 6 dp and `norm`: the mean L2
+    *     norm at 6 dp of the non-null vectors (both null without a
+    *     non-empty vector);
+    *   - `rows`: every row; `successes`: rows where `success` holds.
+    * The first aggregation combines map-side, so the shuffle carries
+    * cells, not rows.
+    */
+  private def driftProfile(df: DataFrame, groupCol: String, valueCol: String,
+                           catCol: String, vecCol: String, success: Column,
+                           side: String): DataFrame = {
+    val (num, cat, dim, row) = (0, 1, 2, 3)
+    val vec = col(vecCol)
+    def cell(kind: Int, v: Column = lit(null).cast("double"),
+             c: Column = lit(null).cast("string"),
+             pos: Column = lit(null).cast("int"),
+             x: Column = lit(null).cast("double"), s: Column = lit(0L)) =
+      struct(lit(kind).as("kind"), v.as("v"), c.as("c"), pos.as("pos"),
+        x.as("x"), s.as("s"))
+    val cells = concat(
+      array(cell(num, v = col(valueCol).cast("double")),
+        cell(cat, c = col(catCol).cast("string")),
+        cell(row, x = when(vec.isNotNull, normD(vec)),
+          s = when(success, 1L).otherwise(0L))),
+      transform(coalesce(vec, array()), (e, i) =>
+        cell(dim, pos = i, x = e.cast("double"))))
+    val kind = col("kind")
+    def cellsOf(k: Int, key: Column, value: Column) =
+      array_sort(collect_list(when(kind === k, struct(key, value))))
+    val hasVec = count(when(kind === dim, 1)) > 0
+    df.select(col(groupCol), explode(filter(cells, e =>
+        e.getField("kind") >= dim || e.getField("v").isNotNull ||
+          e.getField("c").isNotNull)).as("e"))
+      .groupBy(col(groupCol), col("e.kind").as("kind"), col("e.v").as("v"),
+        col("e.c").as("c"), col("e.pos").as("pos"))
+      .agg(count(lit(1)).as("n"), avg(col("e.x")).as("x"),
+        sum(col("e.s")).as("s"))
+      .groupBy(col(groupCol))
+      .agg(
+        cellsOf(num, col("v").as("k"), col("n")).as(s"num_$side"),
+        sum(when(kind === num, col("n"))).as(s"num_n_$side"),
+        cellsOf(cat, col("c").as("k"), col("n")).as(s"cat_$side"),
+        sum(when(kind === cat, col("n"))).as(s"cat_n_$side"),
+        when(hasVec, transform(cellsOf(dim, col("pos"), col("x")),
+          d => round(d.getField("x"), 6))).as(s"centroid_$side"),
+        when(hasVec, round(max(when(kind === row, col("x"))), 6))
+          .as(s"norm_$side"),
+        max(when(kind === row, col("n"))).as(s"rows_$side"),
+        max(when(kind === row, col("s"))).as(s"successes_$side"))
   }
 }

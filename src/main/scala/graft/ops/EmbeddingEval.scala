@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -325,10 +325,18 @@ object EmbeddingEval {
       .select(col(groupCol),
         coalesce(col("n_ref"), lit(0L)).as("n_ref"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"),
-        round(dotD(col("__refc"), col("__curc")) /
-          nullif(normD(col("__refc")) * normD(col("__curc")), lit(0.0)), 6)
-          .as("centroid_cosine"),
-        round(col("__curnorm") / nullif(col("__refnorm"), lit(0.0)), 6)
-          .as("norm_ratio"))
+        centroidCosine(col("__refc"), col("__curc")).as("centroid_cosine"),
+        normRatio(col("__refnorm"), col("__curnorm")).as("norm_ratio"))
   }
+
+  /** Cosine between two centroid vectors at 6 dp; null when either side
+    * is missing or has zero norm. Shared by [[embeddingDriftByGroup]] and
+    * the drift datacard. */
+  private[graft] def centroidCosine(ref: Column, cur: Column): Column =
+    round(dotD(ref, cur) / nullif(normD(ref) * normD(cur), lit(0.0)), 6)
+
+  /** Ratio of mean L2 norms (current over reference) at 6 dp; null when
+    * either side is missing or the reference norm is zero. */
+  private[graft] def normRatio(refNorm: Column, curNorm: Column): Column =
+    round(curNorm / nullif(refNorm, lit(0.0)), 6)
 }

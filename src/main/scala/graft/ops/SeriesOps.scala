@@ -27,14 +27,6 @@ object SeriesOps {
       col(tsCol) >= lit(startDate).cast("timestamp") &&
         col(tsCol) < date_add(lit(endDate).cast("date"), 1).cast("timestamp"))
 
-  /** P10/S4: event-time ≥ cursor scan (`stream_sim.py:136-137`). */
-  def fromTime(df: DataFrame, tsCol: String, t0: String): DataFrame =
-    df.filter(col(tsCol) >= lit(t0).cast("timestamp"))
-
-  /** P9: positive-value cleanse (`data_preproc.ipynb` cells 6, 11). */
-  def cleansePositive(df: DataFrame, valueCol: String): DataFrame =
-    df.filter(col(valueCol) > 0)
-
   /** P11: time-of-day slice with midnight wrap-around — pandas
     * `.loc[time(20,0):time(4,45)]` selects rows whose time-of-day is in the
     * wrapping range (`viz.py:542-547`, `viz.py:1069-1080`).

@@ -50,10 +50,6 @@ object Stats {
       countDistinct(col(keyCol)).as("n_distinct"),
       approx_count_distinct(col(keyCol)).as("n_distinct_approx"))
 
-  /** A6: distinct values of an attribute (`viz.py:354, 449`). */
-  def distinctValues(df: DataFrame, c: String): DataFrame =
-    df.select(col(c)).distinct()
-
   /** Pearson correlation between two (aligned-feature) columns via
     * EXPLICIT moments — n, Σx, Σy, Σxy, Σx², Σy² in one pass, then the
     * closed form. Built-in `corr()` implementations use engine-specific
@@ -223,10 +219,7 @@ object Stats {
       .agg(min(v).as("__lo"), max(v).as("__hi"))
     def binned(df: DataFrame) = df.filter(v.isNotNull)
       .crossJoin(broadcast(edges))
-      .select(least(lit(bins - 1), greatest(lit(0),
-        when(col("__hi") > col("__lo"),
-          floor((v - col("__lo")) / ((col("__hi") - col("__lo")) / bins)))
-          .otherwise(lit(0)))).cast("int").as("bin"))
+      .select(fixedWidthBin(v, col("__lo"), col("__hi"), bins).as("bin"))
       .groupBy(col("bin")).agg(count(lit(1)).as("__n"))
     val grid = ref.sparkSession.range(bins).select(col("id").cast("int").as("bin"))
     def shares(df: DataFrame, out: String) = {
@@ -245,6 +238,50 @@ object Stats {
           .as("psi_term"))
   }
 
+  /** Fixed-width bin of `v` over [lo, hi] in `bins` equal bins, clamped
+    * into the edge bins; a degenerate range (hi ≤ lo, or no edges) puts
+    * everything in bin 0. The one binning formula of [[psi]],
+    * [[psiByGroup]] and the drift datacard.
+    */
+  private[graft] def fixedWidthBin(v: Column, lo: Column, hi: Column,
+                                   bins: Int): Column =
+    least(lit(bins - 1), greatest(lit(0),
+      when(hi > lo, floor((v - lo) / ((hi - lo) / bins)))
+        .otherwise(lit(0)))).cast("int")
+
+  /** Per-(group, `__k`) counts `__n` → one row per group: `cells`, the
+    * (k, n) pairs sorted by key, and their total `n`. */
+  private def countCells(counts: DataFrame, groupCol: String): DataFrame =
+    counts.groupBy(col(groupCol))
+      .agg(array_sort(collect_list(struct(col("__k").as("k"),
+        col("__n").as("n")))).as("cells"), sum(col("__n")).as("n"))
+
+  /** Per-bin counts of a cells array: `bin(k)` maps a key to its bin. */
+  private[graft] def binCounts(cells: Column, bin: Column => Column,
+                               bins: Int): Column =
+    aggregate(cells, array_repeat(lit(0L), bins), (acc, c) =>
+      transform(acc, (a, i) =>
+        when(i === bin(c.getField("k")), a + c.getField("n")).otherwise(a)))
+
+  /** Smoothed PSI between two per-group bin-count vectors: every bin's
+    * share is (n_b + 0.5) / (N + 0.5·bins), so a missing side (null
+    * vector) or an empty bin reads as the smoothed zero instead of
+    * log(0); each term rounds to 6 dp before the fold, so the sum is
+    * order-independent. The one PSI tail of [[psiByGroup]],
+    * [[psiByGroupQuantile]] and the drift datacard.
+    */
+  private[graft] def psiOf(refBins: Column, curBins: Column,
+                           bins: Int): Column = {
+    def shares(counts: Column) =
+      aggregate(coalesce(counts, array_repeat(lit(0L), bins)), lit(0L),
+        (t, n) => t + n, t => transform(
+          coalesce(counts, array_repeat(lit(0L), bins)),
+          n => (n + lit(0.5)) / (t + lit(0.5 * bins))))
+    val terms = zip_with(shares(refBins), shares(curBins),
+      (p, q) => round((p - q) * log(p / q), 6))
+    round(aggregate(terms, lit(0.0), (acc, t) => acc + t), 6)
+  }
+
   /** Per-GROUP PSI in one pass each side (L284): for every group (source,
     * shard, ingest batch) the PSI of its `valueCol` distribution between a
     * reference and a current snapshot — [[psi]]'s fixed-width bins over
@@ -255,62 +292,42 @@ object Stats {
     * |groups|-bounded. This is the drift side of a per-source admission
     * gate (see curation_pipeline_v6): a 100 TB curation run scores every
     * source's drift in two corpus passes instead of |sources| [[psi]]
-    * calls. `psi` = Σ over bins of terms each pre-rounded at 6 dp — every
-    * term is a multiple of 1e-6, so the fold is exact in double and
-    * engine-order-independent.
+    * calls.
     */
   def psiByGroup(ref: DataFrame, cur: DataFrame, valueCol: String,
                  groupCol: String, bins: Int = 10): DataFrame = {
     require(bins > 0, "bins must be positive")
     val v = col(valueCol).cast("double")
-    // Scoped caches on every corpus-derived frame: the binned counts feed
-    // the grid (via groups), the per-group totals, AND the share join —
-    // uncached, Spark duplicates each subtree and the CORPUS would be
-    // scanned ~4× per side (the round-12 plan guard caught exactly this).
-    // Cached, each side is scanned once for binning (+ once for the 1-row
-    // edge aggregate) and everything downstream is (groups × bins)-bounded.
+    // Scoped caches on the edges (they feed both sides) and on each
+    // side's binned counts: a caller that re-derives the same reference
+    // (per micro-batch) reads the reference frames from the CacheManager,
+    // and each side's corpus scan runs once. Everything downstream is
+    // (groups × bins)-bounded.
     val edges = OpCaches.scoped(ref.filter(v.isNotNull)
       .agg(min(v).as("__lo"), max(v).as("__hi")))
     def binned(df: DataFrame) = OpCaches.scoped(df.filter(v.isNotNull)
       .crossJoin(broadcast(edges))
       .select(col(groupCol),
-        least(lit(bins - 1), greatest(lit(0),
-          when(col("__hi") > col("__lo"),
-            floor((v - col("__lo")) / ((col("__hi") - col("__lo")) / bins)))
-            .otherwise(lit(0)))).cast("int").as("bin"))
+        fixedWidthBin(v, col("__lo"), col("__hi"), bins).as("bin"))
       .groupBy(col(groupCol), col("bin")).agg(count(lit(1)).as("__n")))
-    psiFromBinnedByGroup(binned(ref), binned(cur), groupCol, bins,
-      ref.sparkSession)
+    psiFromBinnedByGroup(binned(ref), binned(cur), groupCol, bins)
   }
 
-  /** Shared smoothed-PSI tail over per-(group, bin) COUNT frames — the
-    * downstream of [[psiByGroup]] (fixed-width bins) and
-    * [[psiByGroupQuantile]] (reference-quantile bins): dense
-    * (group × bin) grid so missing bins smooth to 0.5/(tot+0.5·bins)
-    * instead of dropping out; groups = union of both sides (a group
-    * present only in `cur` is maximal drift, not absence of evidence).
+  /** Shared PSI downstream of [[psiByGroup]] (fixed-width bins) and
+    * [[psiByGroupQuantile]] (reference-quantile bins): each side's
+    * per-(group, bin) counts fold into one bin vector per group, the two
+    * sides join full-outer on the group (a group present only in `cur` is
+    * maximal drift, not absence of evidence) and [[psiOf]] scores them.
+    * Null groups report nothing.
     */
   private def psiFromBinnedByGroup(refB: DataFrame, curB: DataFrame,
-                                   groupCol: String, bins: Int,
-                                   spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    val groups = refB.select(col(groupCol))
-      .union(curB.select(col(groupCol))).distinct()
-    val grid = groups.crossJoin(
-      spark.range(bins).select(col("id").cast("int").as("bin")))
-    def shares(df: DataFrame, out: String) = {
-      val tot = df.groupBy(col(groupCol)).agg(sum(col("__n")).as("__t"))
-      grid.join(df, Seq(groupCol, "bin"), "left")
-        .join(tot, Seq(groupCol), "left")
-        .select(col(groupCol), col("bin"),
-          ((coalesce(col("__n"), lit(0L)) + lit(0.5)) /
-            (coalesce(col("__t"), lit(0L)) + lit(0.5 * bins))).as(out))
-    }
-    shares(refB, "__p").join(shares(curB, "__q"), Seq(groupCol, "bin"))
-      .select(col(groupCol), col("bin"),
-        round((col("__p") - col("__q")) * log(col("__p") / col("__q")), 6)
-          .as("__term"))
-      .groupBy(col(groupCol))
-      .agg(round(sum(col("__term")), 6).as("psi"))
+                                   groupCol: String, bins: Int): DataFrame = {
+    def vectors(df: DataFrame, out: String) =
+      countCells(df.filter(col(groupCol).isNotNull)
+          .select(col(groupCol), col("bin").as("__k"), col("__n")), groupCol)
+        .select(col(groupCol), binCounts(col("cells"), identity, bins).as(out))
+    vectors(refB, "__p").join(vectors(curB, "__q"), Seq(groupCol), "full_outer")
+      .select(col(groupCol), psiOf(col("__p"), col("__q"), bins).as("psi"))
   }
 
   /** [[psiByGroup]] with EQUAL-MASS bins from the reference's exact
@@ -327,7 +344,7 @@ object Stats {
     * single-partition sort), then collected as a (bins−1)-bounded
     * driver literal and applied map-side on both snapshots:
     * bin(v) = #edges strictly below v. Identical 0.5-Laplace smoothing
-    * and dense grid as [[psiByGroup]]; scores remain cross-group
+    * and PSI tail as [[psiByGroup]]; scores remain cross-group
     * comparable because every group is binned on the same global edges.
     */
   def psiByGroupQuantile(ref: DataFrame, cur: DataFrame, valueCol: String,
@@ -350,15 +367,14 @@ object Stats {
         col("__r").cast("long")))
       .select(col("__v"))
       .collect().map(_.getDouble(0)).toSeq.sorted
-    def binned(df: DataFrame) = OpCaches.scoped(
+    def binned(df: DataFrame) =
       df.filter(v.isNotNull && col(groupCol).isNotNull)
         .select(col(groupCol),
           edges.foldLeft(lit(0)) { (acc, e) =>
             acc + when(v > lit(e), 1).otherwise(0)
           }.cast("int").as("bin"))
-        .groupBy(col(groupCol), col("bin")).agg(count(lit(1)).as("__n")))
-    psiFromBinnedByGroup(binned(ref), binned(cur), groupCol, bins,
-      ref.sparkSession)
+        .groupBy(col(groupCol), col("bin")).agg(count(lit(1)).as("__n"))
+    psiFromBinnedByGroup(binned(ref), binned(cur), groupCol, bins)
   }
 
   /** Incremental aggregate maintenance: per-key mergeable state
@@ -966,100 +982,100 @@ object Stats {
     * group g, D_g = max over value points of |ECDF_ref,g − ECDF_cur,g| —
     * [[ksDrift]]'s group-vs-rest screen re-aimed at temporal drift
     * (yesterday's crawl vs today's, per source), the two-sample
-    * companion to [[psiByGroup]] that needs no binning. EXACT over
-    * integers: at each distinct value |cumR·n_cur − cumC·n_ref| is an
-    * integer; the single division happens once, at the max. The grid is
-    * the distinct (group, value) pairs present on EITHER side — never a
-    * global cross join — and the cumulative windows partition by group,
-    * so the only skew bound is one group's own distinct-value count.
-    * Headroom: cum·n products need n_ref,g·n_cur,g < 2⁶³ — bucket values
-    * first past ~10⁹ rows per group.
+    * companion to [[psiByGroup]] that needs no binning ([[ksOf]]).
     */
   def ksByGroup(ref: DataFrame, cur: DataFrame, valueCol: String,
-                groupCol: String): DataFrame = {
-    def cells(df: DataFrame, out: String) =
-      df.select(col(groupCol).as("__g"),
-          col(valueCol).cast("double").as("__v"))
-        .filter(col("__v").isNotNull && col("__g").isNotNull)
-        .groupBy(col("__g"), col("__v")).agg(count(lit(1)).as(out))
-    // r16 opt (stream-static reuse): the REFERENCE side's (group, value)
-    // cells are scope-cached — in the per-micro-batch admission datacard
-    // the same reference frame is re-aggregated every batch, and Spark's
-    // CacheManager matches the canonicalized plan, so batch 2+ reads the
-    // cached cells instead of re-scanning the snapshot (the psiByGroup
-    // binned-counts pattern, applied to KS). One-shot callers pay one
-    // small cache write on a |distinct (group, value)|-bounded frame.
-    val grid = OpCaches.scoped(cells(ref, "__cr")).join(cells(cur, "__cc"),
-        Seq("__g", "__v"), "full_outer")
-      .select(col("__g"), col("__v"),
-        coalesce(col("__cr"), lit(0L)).as("__cr"),
-        coalesce(col("__cc"), lit(0L)).as("__cc"))
-    val wv = Window.partitionBy(col("__g")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tot = Window.partitionBy(col("__g"))
-    grid
-      .withColumn("__cumr", sum(col("__cr")).over(wv))
-      .withColumn("__cumc", sum(col("__cc")).over(wv))
-      .withColumn("__nr", sum(col("__cr")).over(tot))
-      .withColumn("__nc", sum(col("__cc")).over(tot))
-      .groupBy(col("__g"))
-      .agg(max(col("__nr")).as("__nrm"), max(col("__nc")).as("__ncm"),
-        max(abs(col("__cumr") * col("__nc") - col("__cumc") * col("__nr")))
-          .as("__num"))
-      .select(col("__g").as(groupCol),
-        col("__nrm").as("n_ref"), col("__ncm").as("n_cur"),
-        when(col("__nrm") > 0 && col("__ncm") > 0,
-          round(col("__num").cast("double") /
-            (col("__nrm") * col("__ncm")).cast("double"), 6)).as("ks"))
-  }
+                groupCol: String): DataFrame =
+    cellDrift(ref, cur, groupCol, col(valueCol).cast("double"), "ks", ksOf)
 
   /** Two-snapshot Jensen–Shannon drift PER GROUP over a CATEGORICAL
     * column (L296) — the categorical member of the per-group drift
     * family: [[psiByGroup]] covers binned numerics, [[ksByGroup]]
     * continuous numerics, this one category mixes (language shares,
     * script mixes, format tags — "did src7's language mix shift since
-    * yesterday's crawl"). JS = ½·KL(p‖m) + ½·KL(q‖m) with m the
-    * midpoint: symmetric, bounded by ln 2 (so one threshold works for
-    * every source), and needs no smoothing — a category absent on one
-    * side contributes only through the present side (0·ln 0 ≡ 0),
-    * unlike the unbounded KL. Shuffle = (group × category) count
-    * partials per side (map-side combined); the grid is the per-group
-    * union of observed categories, never a global cross join; per-group
-    * sums fold over SORTED terms so the result is order-independent and
-    * engine-portable.
+    * yesterday's crawl"); see [[jsOf]].
     */
   def jsByGroup(ref: DataFrame, cur: DataFrame, catCol: String,
-                groupCol: String): DataFrame = {
-    def cells(df: DataFrame, out: String) =
-      df.select(col(groupCol).as("__g"), col(catCol).cast("string").as("__c"))
-        .filter(col("__g").isNotNull && col("__c").isNotNull)
-        .groupBy(col("__g"), col("__c")).agg(count(lit(1)).as(out))
-    // r16 opt: reference-side cells scope-cached for stream-static reuse
-    // (see ksByGroup) — |groups × categories|-bounded.
-    val grid = OpCaches.scoped(cells(ref, "__cr")).join(cells(cur, "__cc"),
-        Seq("__g", "__c"), "full_outer")
-      .select(col("__g"), col("__c"),
-        coalesce(col("__cr"), lit(0L)).as("__cr"),
-        coalesce(col("__cc"), lit(0L)).as("__cc"))
-    val tot = Window.partitionBy(col("__g"))
-    grid
-      .withColumn("__nr", sum(col("__cr")).over(tot))
-      .withColumn("__nc", sum(col("__cc")).over(tot))
-      .withColumn("__p", when(col("__nr") > 0,
-        col("__cr").cast("double") / col("__nr")).otherwise(lit(0.0)))
-      .withColumn("__q", when(col("__nc") > 0,
-        col("__cc").cast("double") / col("__nc")).otherwise(lit(0.0)))
-      .withColumn("__m", (col("__p") + col("__q")) / 2.0)
-      .withColumn("__term",
-        coalesce(when(col("__p") > 0,
-          lit(0.5) * col("__p") * log(col("__p") / col("__m"))), lit(0.0)) +
-        coalesce(when(col("__q") > 0,
-          lit(0.5) * col("__q") * log(col("__q") / col("__m"))), lit(0.0)))
-      .groupBy(col("__g"))
-      .agg(max(col("__nr")).as("n_ref"), max(col("__nc")).as("n_cur"),
-        round(aggregate(array_sort(collect_list(col("__term"))),
-          lit(0.0), (acc, x) => acc + x), 6).as("js"))
-      .select(col("__g").as(groupCol), col("n_ref"), col("n_cur"), col("js"))
+                groupCol: String): DataFrame =
+    cellDrift(ref, cur, groupCol, col(catCol).cast("string"), "js", jsOf)
+
+  /** Per group, `n_ref`/`n_cur` (non-null `key` rows per side) and
+    * `out` = `stat` of the two sides' sorted (key, count) cells. Each
+    * side is one two-level aggregation; the sides join full-outer on the
+    * group, so a one-sided group still reports. A group's cells are one
+    * row, so the only skew bound is one group's own distinct-key count.
+    * The reference cells are scope-cached: a per-micro-batch caller
+    * re-deriving the same reference reads them from the CacheManager.
+    */
+  private def cellDrift(ref: DataFrame, cur: DataFrame, groupCol: String,
+                        key: Column, out: String,
+                        stat: (Column, Column, Column, Column) => Column) = {
+    def cells(df: DataFrame, s: String) =
+      countCells(df.select(col(groupCol), key.as("__k"))
+          .filter(col(groupCol).isNotNull && col("__k").isNotNull)
+          .groupBy(col(groupCol), col("__k")).agg(count(lit(1)).as("__n")),
+          groupCol)
+        .select(col(groupCol), col("cells").as(s"__$s"), col("n").as(s"n_$s"))
+    OpCaches.scoped(cells(ref, "ref")).join(cells(cur, "cur"), Seq(groupCol),
+        "full_outer")
+      .na.fill(0L, Seq("n_ref", "n_cur"))
+      .select(col(groupCol), col("n_ref"), col("n_cur"),
+        stat(col("__ref"), col("__cur"), col("n_ref"), col("n_cur")).as(out))
+  }
+
+  /** KS statistic of two sorted numeric cells arrays (`k`, `n`) with
+    * their totals — null unless both sides have evidence. EXACT over
+    * integers: one fold over the merged cells keeps the cumulative
+    * counts, and at each distinct-value boundary |cumR·n_cur − cumC·n_ref|
+    * is an integer; the single division happens once, at the max.
+    * Headroom: n_ref·n_cur < 2⁶³.
+    */
+  private[graft] def ksOf(ref: Column, cur: Column, nr: Column,
+                          nc: Column): Column = {
+    def tagged(cells: Column, r: Column => Column, c: Column => Column) =
+      transform(cells, x => struct(x.getField("k").as("k"),
+        r(x.getField("n")).as("r"), c(x.getField("n")).as("c")))
+    val zero = struct(lit(null).cast("double").as("k"), lit(0L).as("r"),
+      lit(0L).as("c"), lit(0L).as("d"))
+    // Before the first cell of a new value is added, the cumulative
+    // counts cover every smaller value: compare the ECDFs there.
+    val d = aggregate(array_sort(concat(tagged(ref, identity, _ => lit(0L)),
+        tagged(cur, _ => lit(0L), identity))),
+      zero, (acc, x) => struct(x.getField("k").as("k"),
+        (acc.getField("r") + x.getField("r")).as("r"),
+        (acc.getField("c") + x.getField("c")).as("c"),
+        when(x.getField("k") === acc.getField("k"), acc.getField("d"))
+          .otherwise(greatest(acc.getField("d"),
+            abs(acc.getField("r") * nc - acc.getField("c") * nr))).as("d")))
+      .getField("d")
+    when(nr > 0 && nc > 0,
+      round(d.cast("double") / (nr * nc).cast("double"), 6))
+  }
+
+  /** Jensen–Shannon divergence of two category cells arrays with their
+    * totals: JS = ½·KL(p‖m) + ½·KL(q‖m), m the midpoint, over the union
+    * of both sides' categories. Symmetric, bounded by ln 2, and needs no
+    * smoothing — a category absent on one side contributes only through
+    * the present side (0·ln 0 ≡ 0); a side with no cells has all-zero
+    * shares, so a one-sided group reads ½·ln 2. Terms fold in sorted
+    * order, so the sum is order-independent and engine-portable.
+    */
+  private[graft] def jsOf(ref: Column, cur: Column, nr: Column,
+                          nc: Column): Column = {
+    val (r, c) = (coalesce(ref, array()), coalesce(cur, array()))
+    def share(cells: Column, n: Column, k: Column) = when(n > 0,
+      aggregate(filter(cells, x => x.getField("k") === k), lit(0L),
+        (a, x) => a + x.getField("n")).cast("double") / n).otherwise(lit(0.0))
+    val pq = transform(array_distinct(concat(transform(r, _.getField("k")),
+        transform(c, _.getField("k")))),
+      k => struct(share(r, nr, k).as("p"), share(c, nc, k).as("q")))
+    val terms = transform(pq, s => {
+      val (p, q) = (s.getField("p"), s.getField("q"))
+      val m = (p + q) / 2.0
+      coalesce(when(p > 0, lit(0.5) * p * log(p / m)), lit(0.0)) +
+        coalesce(when(q > 0, lit(0.5) * q * log(q / m)), lit(0.0))
+    })
+    round(aggregate(array_sort(terms), lit(0.0), (acc, x) => acc + x), 6)
   }
 
   /** Stationary distribution of the empirical event-type Markov chain

@@ -666,8 +666,8 @@ object AnalyticsQueries {
 
     // L287: TWO-SNAPSHOT KS per source (ref = doc_id%3 crawl snapshot,
     // cur = the rest — the a18 yesterday/today split) — ksDrift re-aimed
-    // at temporal drift, binning-free companion to psiByGroup; the grid
-    // is per-group distinct values, never a global cross join.
+    // at temporal drift, binning-free companion to psiByGroup; each side
+    // is per-group sorted value cells, never a global cross join.
     "dq_ks_by_source" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       Stats.ksByGroup(
@@ -714,8 +714,8 @@ object AnalyticsQueries {
     // L300: UNIFIED DRIFT DATACARD — one row per source carrying the
     // whole drift family (psi binned / ks continuous / js categorical /
     // centroid-cosine + norm-ratio vector) from the same snapshot split,
-    // over documents joined 1:1 to their embeddings. Both snapshots are
-    // scope-cached inside the op so the four statistics share the scans.
+    // over documents joined 1:1 to their embeddings. Each snapshot is
+    // scanned once into a per-source profile that all four statistics read.
     "dq_drift_datacard" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id").as("doc_id"), col("embedding"))

@@ -14,11 +14,18 @@ import graft.ops.{DataQuality, Stats}
   * individually limping through the per-document gates downstream.
   *
   * Scale/state design: the reference snapshot is a STATIC frame (the
-  * curated corpus's profile — a stream-static join side, re-read or pinned
-  * per batch by the caller); everything derived here is |sources|-bounded.
-  * Inside `foreachBatch`, call `graft.ops.OpCaches.releaseAll()` once the
-  * batch's outputs are materialized — psiByGroup registers scoped caches
-  * that would otherwise accumulate across batches.
+  * curated corpus's profile — a stream-static join side, pinned by the
+  * caller across batches); everything derived here is |sources|-bounded.
+  *
+  * Cache contract: [[admissionDatacard]] scope-caches one frame, the
+  * reference's drift profile; a later batch re-deriving the same
+  * reference finds it in the CacheManager and registers nothing, so
+  * `graft.ops.OpCaches.registered` stays flat over a stream. The
+  * single-arm reports scope-cache their reference-side aggregates the
+  * same way, and the PSI arm ([[admissionReport]]) also caches each
+  * batch's (sources × bins) counts. Call `graft.ops.OpCaches.releaseAll()`
+  * once, after the stream stops: releasing per batch would re-scan the
+  * reference every batch.
   */
 object StreamAdmission {
 
@@ -28,8 +35,8 @@ object StreamAdmission {
     * admission verdict (wilson_lo ≥ minWilsonLo ∧ psi ≤ maxPsi). Sources
     * present in the reference but absent from the batch yield no row
     * (nothing to admit); sources present only in the batch get
-    * maximal-drift PSI from psiByGroup's dense grid — absence of reference
-    * evidence reads as drift, never as a free pass.
+    * maximal-drift PSI against the smoothed empty reference — absence of
+    * reference evidence reads as drift, never as a free pass.
     */
   def admissionReport(batch: DataFrame, reference: DataFrame,
                       groupCol: String, valueCol: String, quality: Column,
@@ -47,18 +54,17 @@ object StreamAdmission {
   /** [[admissionReport]] with the drift arm swapped to the binning-free
     * two-snapshot KS statistic (curation v7's streaming form): per
     * source, D = sup |ECDF_ref − ECDF_batch| over `valueCol`. No binning
-    * sensitivity, exact integer ECDF arithmetic; the per-group grid is
-    * the distinct (source, value) pairs of the reference plus the batch
-    * — bounded by the reference's distinct values per source, never a
-    * global cross join.
+    * sensitivity, exact integer ECDF arithmetic; each side is one sorted
+    * (value, count) cells row per source, merged in one fold — bounded by
+    * the distinct values per source, never a global cross join.
     *
     * A source with NO reference evidence (ksByGroup's n_ref = 0 case,
     * where the statistic is undefined) reads as MAXIMAL drift: `ks`
     * coalesces to 1.0 and `admitted` is an explicit `false`, never a
     * tri-state NULL — matching the PSI arm, where absence shows up as
-    * high PSI against the dense grid. [[admit]] would filter NULLs out
-    * anyway; this makes the REPORT say the same thing to a consumer
-    * reading the boolean.
+    * high PSI against the smoothed empty side. [[admit]] would filter
+    * NULLs out anyway; this makes the REPORT say the same thing to a
+    * consumer reading the boolean.
     */
   def admissionReportKs(batch: DataFrame, reference: DataFrame,
                         groupCol: String, valueCol: String, quality: Column,
@@ -147,13 +153,12 @@ object StreamAdmission {
     *
     * Absence-of-reference-evidence semantics match the single arms, and
     * each arm is gated on its OWN modality's evidence: PSI reads high off
-    * the dense grid, KS (numeric evidence) coalesces to 1.0, JS
-    * (categorical evidence — jsByGroup's own counts, not the KS pass's)
+    * the smoothed empty side, KS (numeric evidence) coalesces to 1.0, JS
+    * (categorical evidence — the JS arm's own counts, not the KS pass's)
     * to ln 2, the vector metrics stay NULL — and the verdict is an
-    * explicit false, never NULL. State is |sources|-bounded; the reference is a
-    * static frame (stream-static semantics); call
-    * `OpCaches.releaseAll()` per batch as with the other arms
-    * (driftDatacard scope-caches both snapshots).
+    * explicit false, never NULL. The Wilson counts come from the batch's
+    * own drift profile, so one batch is one scan plus one join against
+    * the cached reference profile (see the cache contract above).
     */
   def admissionDatacard(batch: DataFrame, reference: DataFrame,
                         groupCol: String, valueCol: String, catCol: String,
@@ -161,29 +166,20 @@ object StreamAdmission {
                         minWilsonLo: Double, maxPsi: Double, maxKs: Double,
                         maxJs: Double, minCentroidCos: Double,
                         maxNormDelta: Double, bins: Int = 10): DataFrame = {
-    val wil = DataQuality.wilsonShare(batch, groupCol, quality)
-      .select(col(groupCol), col("n"), col("wilson_lo"))
-    val card = graft.ops.DataQuality.driftDatacard(
-      reference, batch, groupCol, valueCol, catCol, vecCol, bins)
-    wil.join(card.select(col(groupCol), col("psi"),
-        coalesce(col("ks"), lit(1.0)).as("ks"),
-        // Gate JS on the JS arm's OWN categorical evidence counts, not
-        // the KS pass's numeric counts: a source with all-null numerics
-        // but live categorical columns on both sides keeps its real js
-        // (and its ks correctly coalesces to 1.0) — the datacard's whole
-        // point is showing WHICH modality moved (round-14 advice #2;
-        // matches admissionReportJs' absence semantics exactly).
-        when(col("js_n_ref") > 0 && col("js_n_cur") > 0, col("js"))
-          .otherwise(lit(math.log(2.0))).as("js"),
-        col("centroid_cosine"), col("norm_ratio")), Seq(groupCol))
-      .select(col(groupCol), col("n"), col("wilson_lo"), col("psi"),
-        col("ks"), col("js"), col("centroid_cosine"), col("norm_ratio"),
-        coalesce(col("wilson_lo") >= minWilsonLo &&
-          col("psi") <= maxPsi && col("ks") <= maxKs &&
-          col("js") <= maxJs &&
+    val (_, wilsonLo, _) = DataQuality.wilsonBounds(col("n"), col("successes"))
+    val ks = coalesce(col("ks"), lit(1.0))
+    val js = when(col("js_n_ref") > 0 && col("js_n_cur") > 0, col("js"))
+      .otherwise(lit(math.log(2.0)))
+    DataQuality.driftCard(reference, batch, groupCol, valueCol, catCol,
+        vecCol, bins, quality)
+      .filter(col("n").isNotNull)
+      .select(col(groupCol), col("n"), wilsonLo.as("wilson_lo"), col("psi"),
+        ks.as("ks"), js.as("js"), col("centroid_cosine"), col("norm_ratio"),
+        coalesce(wilsonLo >= minWilsonLo && col("psi") <= maxPsi &&
+          ks <= maxKs && js <= maxJs &&
           col("centroid_cosine") >= minCentroidCos &&
-          abs(col("norm_ratio") - 1.0) <= maxNormDelta,
-          lit(false)).as("admitted"))
+          abs(col("norm_ratio") - 1.0) <= maxNormDelta, lit(false))
+          .as("admitted"))
   }
 
   /** The micro-batch filtered to rows of the sources a verdict frame

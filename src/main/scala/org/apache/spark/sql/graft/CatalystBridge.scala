@@ -26,7 +26,8 @@ object CatalystBridge {
     }
 
   /** Count REAL leaf scans of an executed plan: (parquet file scans,
-    * in-memory cache scans). Traverses through AQE wrappers but does NOT
+    * in-memory cache scans). Traverses through AQE wrappers and into
+    * subquery plans (scalar subqueries, runtime bloom filters) but does NOT
     * recurse into `InMemoryRelation.cachedPlan` — a cached subtree's scan
     * executes once at materialization, not per reference. String-counting
     * `"FileScan"` in `executedPlan.toString` is unsound for this purpose:
@@ -44,7 +45,7 @@ object CatalystBridge {
       case _: FileSourceScanExec => (1, 0)
       case _: InMemoryTableScanExec => (0, 1)
       case other =>
-        other.children.map(walk)
+        (other.children ++ other.subqueries).map(walk)
           .foldLeft((0, 0)) { case ((a, b), (c, d)) => (a + c, b + d) }
     }
     walk(df.queryExecution.executedPlan)

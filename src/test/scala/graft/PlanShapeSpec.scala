@@ -1050,4 +1050,62 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(eScans == 0, s"e2e grew: scans=$eScans (measured 0)")
     graft.ops.OpCaches.releaseAll()
   }
+
+  /** Shuffle exchanges of an EXECUTED plan, by traversal: through AQE
+    * wrappers and query stages into their exchanges and into subquery
+    * plans; a reused exchange or a cache scan counts nothing. */
+  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def walk(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case e: ShuffleExchangeExec => 1 + walk(e.child)
+      case other => (other.children ++ other.subqueries).map(walk).sum
+    }
+    walk(df.queryExecution.executedPlan)
+  }
+
+  test("realScanCounts counts file scans inside subquery plans") {
+    val path = java.nio.file.Files.createTempDirectory("graft_subq").toString + "/t"
+    spark.range(10).selectExpr("id AS x").write.parquet(path)
+    val df = spark.sql(
+      s"SELECT id, (SELECT max(x) FROM parquet.`$path`) AS m FROM range(3)")
+    assert(org.apache.spark.sql.graft.CatalystBridge.realScanCounts(df) == ((1, 0)),
+      df.queryExecution.executedPlan.toString)
+  }
+
+  test("one admission batch: the batch's own scan, the reference from cache") {
+    // A parquet-backed micro-batch against a parquet-backed reference:
+    // the batch is scanned once into its profile, the reference only
+    // through its scope-cached profile, and the executed plan's shuffle
+    // exchanges stay at the measured count (no slack).
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft_adm").toString
+    def write(name: String, shift: Double): String = {
+      val path = s"$root/$name"
+      (1 to 400).map { i =>
+        (s"s${i % 8}", i % 37 + shift, if (i % 3 == 0) "en" else "de",
+          Seq(1.0, (i % 5).toDouble))
+      }.toDF("source", "value", "lang", "vec").write.parquet(path)
+      path
+    }
+    val reference = spark.read.parquet(write("ref", 0.0))
+    val batch = spark.read.parquet(write("batch", 1.0))
+    val rep = graft.streaming.StreamAdmission.admissionDatacard(batch, reference,
+      "source", "value", "lang", "vec", col("value") > 5.0, minWilsonLo = 0.2,
+      maxPsi = 1.0, maxKs = 0.5, maxJs = 0.4, minCentroidCos = 0.8,
+      maxNormDelta = 0.3)
+    try {
+      assert(org.apache.spark.sql.graft.CatalystBridge.realScanCounts(rep) == ((1, 1)),
+        s"expected (batch file scans, reference cache scans) = (1, 1):\n" +
+          rep.queryExecution.executedPlan)
+      assert(rep.collect().length == 8)
+      val exchanges = shuffleExchanges(rep)
+      assert(exchanges <= 2, s"admission batch exchanges grew: $exchanges " +
+        s"(measured 2):\n${rep.queryExecution.executedPlan}")
+    } finally graft.ops.OpCaches.releaseAll()
+  }
 }
