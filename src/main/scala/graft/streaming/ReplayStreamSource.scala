@@ -16,6 +16,8 @@ import org.apache.spark.sql.graft.ParquetScanBridge
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.Tables
+
 /** Micro-batch REPLAY source — the reference simulator's contract
   * (`stream_sim.py:15-83`: serve batches of N distinct event timestamps,
   * seek via start_time, wrap-around at end of data) as a DataSourceV2
@@ -66,17 +68,18 @@ class ReplayStreamSource extends TableProvider {
 
   private def spark: SparkSession = SparkSession.active
 
-  // Schema inference lists files and reads parquet footers on the driver;
+  // Schema inference lists files and reads parquet footers on the driver
+  // (a single-file table resolves once per session, [[Tables.read]]);
   // Spark calls inferSchema and then hands the result back to getTable on
   // the SAME provider instance, so the one inference is cached and
-  // getTable re-reads the table only when the user supplied an explicit
+  // getTable resolves the table only when the user supplied an explicit
   // schema that bypassed inferSchema.
   @volatile private var inferredFor: Option[(String, StructType)] = None
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val opts = ReplayStreamSource.scalaOptions(options)
     val p = ReplayStreamSource.path(opts)
-    val schema = spark.read.parquet(p).schema
+    val schema = Tables.read(spark, p).schema
     inferredFor = Some((p, schema))
     schema
   }
@@ -90,7 +93,7 @@ class ReplayStreamSource extends TableProvider {
     // accepting a different user-supplied one would surface later as a
     // confusing batch-vs-source schema mismatch inside the stream engine.
     val inferred = inferredFor.collect { case (`p`, s) => s }
-      .getOrElse(spark.read.parquet(p).schema)
+      .getOrElse(Tables.read(spark, p).schema)
     require(schema == inferred,
       s"replay source infers its schema from the parquet table ($inferred); " +
         "drop the explicit .schema(...) or make it identical")
@@ -183,7 +186,11 @@ private[graft] class ReplayMicroBatchStream(spark: SparkSession,
   private val pageSize = options.get("cursorPageSize").map(_.toInt).getOrElse(8192)
   require(pageSize > 0, "cursorPageSize must be positive")
 
-  private def distinctTs = spark.read.parquet(pathOpt)
+  // Driver-side reads of the table (cursor build, page fetches) use the
+  // schema the source already holds: no inference job per read.
+  private def history = spark.read.schema(tableSchema).parquet(pathOpt)
+
+  private def distinctTs = history
     .filter(col(tsCol).isNotNull) // a null event time has no replay position
     .select(col(tsCol)).distinct()
 
@@ -236,7 +243,7 @@ private[graft] class ReplayMicroBatchStream(spark: SparkSession,
   private def page(p: Long): Array[Long] = synchronized {
     if (p != cachedPageIdx) {
       val lo = pageFirstTs(p.toInt)
-      val base = spark.read.parquet(pathOpt)
+      val base = history
         .filter(col(tsCol).isNotNull && col(tsCol) >= tsBound(lo))
       val bounded =
         if (p.toInt + 1 < pageFirstTs.length)

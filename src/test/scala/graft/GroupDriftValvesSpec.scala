@@ -5,9 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Similarity, Stats}
 
-/** Round-12 batch: per-group PSI (L284), the ENGAGED density valves
-  * (jaccardPairsPrefix maxDf / editDistancePairs maxBlockSize — round-11
-  * verdict items #3/#7), and the whitenDiagonal single-sample guard.
+/** Per-group drift and density valves: per-group PSI (L284), the
+  * ENGAGED density valves (jaccardPairsPrefix maxDf / editDistancePairs
+  * maxBlockSize — round-11 verdict items #3/#7), and the whitenDiagonal
+  * single-sample guard.
+  *
+  * The class keeps its earlier name: suite class plus test name is each
+  * test's id in the suite's reports and history.
   */
 class Round12OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -5,10 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, Similarity, Stats}
 
-/** Round-13 batch: the LSH banding planner CONSUMED by execution
-  * (bandsFor → minhashSignaturesPlanned → nearDuplicates, the round-12
-  * verdict's #1 item; since round 14 the planner IS nearDuplicates'
-  * default banding path).
+/** LSH banding and group drift: the LSH banding planner CONSUMED by
+  * execution (bandsFor → minhashSignaturesPlanned → nearDuplicates, the
+  * round-12 verdict's #1 item; since round 14 the planner IS
+  * nearDuplicates' default banding path), truncated re-rank kNN, per-group
+  * JS and embedding drift, and the leakage-safe split.
+  *
+  * The class keeps its earlier name: suite class plus test name is each
+  * test's id in the suite's reports and history.
   */
 class Round13OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -38,10 +38,10 @@ class ReplayStreamSpec extends AnyFunSuite {
   /** Run the source to exhaustion; returns each non-empty micro-batch's
     * distinct tsUs values ascending.
     */
-  private def runReplay(opts: Map[String, String]): Seq[Seq[Long]] = {
+  private def runReplay(opts: Map[String, String], path: String = dataDir): Seq[Seq[Long]] = {
     val seen = ArrayBuffer.empty[Seq[Long]]
     var reader = spark.readStream.format(classOf[ReplayStreamSource].getName)
-      .option("path", dataDir).option("tsCol", "ts")
+      .option("path", path).option("tsCol", "ts")
     opts.foreach { case (k, v) => reader = reader.option(k, v) }
     val q = reader.load().writeStream
       .foreachBatch { (b: Dataset[Row], _: Long) =>
@@ -289,5 +289,41 @@ class ReplayStreamSpec extends AnyFunSuite {
         s"driver cursor state must stay bounded by page machinery, got $state Longs")
     }
     assert(off == 5000L)
+  }
+
+  test("paged cursor over 3 pages: unchanged replay, page fetch runs no schema inference") {
+    // 10 distinct timestamps x 2 rows, page size 4: pages {0-3}, {4-7}, {8-9}.
+    val paged = for { t <- 0L until 10L; u <- 0L until 2L } yield (u, us(t), t * 10.0 + u)
+    val dir = java.nio.file.Files.createTempDirectory("replay_pages").toString + "/series"
+    paged.toDF("userId", "tsUs", "value")
+      .withColumn("ts", timestamp_micros(col("tsUs")))
+      .write.parquet(dir)
+    val opts = Map("timestampsPerTrigger" -> "3", "cursorPageSize" -> "4")
+    val got = runReplay(opts, dir)
+    assert(got == (0L until 10L).map(us).grouped(3).map(_.toSeq).toSeq,
+      s"batches of 3 distinct timestamps across page boundaries: $got")
+    val name = "replay_paged_rows"
+    var reader = spark.readStream.format(classOf[ReplayStreamSource].getName)
+      .option("path", dir).option("tsCol", "ts")
+    opts.foreach { case (k, v) => reader = reader.option(k, v) }
+    val q = reader.load().writeStream.outputMode("append").format("memory")
+      .queryName(name).start()
+    try { q.processAllAvailable() } finally q.stop()
+    assert(spark.table(name).select("userId", "tsUs", "value")
+      .as[(Long, Long, Double)].collect().sorted.toSeq == paged.sorted,
+      "every stored row served exactly once")
+
+    import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+    val stream = new graft.streaming.ReplayMicroBatchStream(spark,
+      spark.read.parquet(dir).schema,
+      Map("path" -> dir, "tsCol" -> "ts", "cursorPageSize" -> "4"))
+    stream.planInputPartitions(LongOffset(0L), LongOffset(1L)) // cursor + page 0
+    def jobsOf(s: Long): Int = org.apache.spark.graft.JobCount(spark.sparkContext)(
+      stream.planInputPartitions(LongOffset(s), LongOffset(s + 1)))._2
+    // Page 1's fetch is the distinct-timestamp query over the range scan
+    // (its shuffle stage and result stage); reading with the held schema
+    // adds no inference job.
+    assert(jobsOf(4L) == 2, "one page fetch")
+    assert(jobsOf(5L) == 0, "a slice of the cached page fetches nothing")
   }
 }

@@ -5,8 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Dedup, OpCaches, Stats}
 
-/** Round-14 batch: the signature-store incremental LSH probe and the
-  * reference-quantile PSI binning.
+/** Signature store and quantile PSI: the signature-store incremental LSH
+  * probe and the reference-quantile PSI binning.
+  *
+  * The class keeps its earlier name: suite class plus test name is each
+  * test's id in the suite's reports and history.
   */
 class Round14OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -5,8 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Graph, Similarity, Stats, TextAnalysis}
 
-/** Round-11 batch: rank/effect-size statistics, ranking agreement,
+/** Statistics ops: rank/effect-size statistics, ranking agreement,
   * lexical diversity, and embedding whitening (SURVEY §2.12 L269–L275).
+  *
+  * The class keeps its earlier name: suite class plus test name is each
+  * test's id in the suite's reports and history.
   */
 class Round11OpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -33,11 +33,15 @@ if [ "${GRAFT_PRECOMMIT_NOSPEC:-0}" != "1" ]; then
   CHANGED=$({ git diff --name-only HEAD -- 'src/main/scala';
       git ls-files --others --exclude-standard -- 'src/main/scala'; } |
     grep '\.scala$' | xargs -r -n1 basename | sed 's/\.scala$//' | sort -u)
+  # Suites are named from their `class`/`object` declarations, not from
+  # file names: a file may be named by subject while its class keeps an
+  # older name (StatisticsOpsSpec.scala holds Round11OpsSpec).
   SPECS=""
   for c in $CHANGED; do
     SPECS="$SPECS $(grep -rlE "\b$c\b" src/test/scala/graft \
-      --include='*.scala' 2>/dev/null | xargs -r -n1 basename |
-      sed 's/\.scala$//')"
+      --include='*.scala' 2>/dev/null | xargs -r grep -hoE \
+      '^(final )?(class|object) [A-Za-z0-9_]+(Spec|Properties)\b' |
+      awk '{print $NF}')"
   done
   SPECS=$(echo "$SPECS" | tr ' ' '\n' | grep -E 'Spec$|Properties$' |
     sort -u | sed 's/^/graft./' | tr '\n' ' ')
@@ -52,5 +56,18 @@ if [ "${GRAFT_PRECOMMIT_NOSPEC:-0}" != "1" ]; then
   else
     echo "[precommit] no spec references changed classes"
   fi
+fi
+# The benchmark (perfbench/) compiles src/main/scala with its own sources,
+# so a change to either runs the benchmark's own logic tests.
+if [ -n "$({ git diff --name-only HEAD -- perfbench src/main/scala;
+    git ls-files --others --exclude-standard -- perfbench src/main/scala; })" ]; then
+  echo "[precommit] perfbench unit tests"
+  PYTHONDONTWRITEBYTECODE=1 python3 -m unittest discover -s perfbench/tests \
+    > /tmp/precommit_perfbench.log 2>&1 || {
+    tail -30 /tmp/precommit_perfbench.log
+    echo "[precommit] FAIL: perfbench unit tests"
+    exit 1
+  }
+  tail -1 /tmp/precommit_perfbench.log
 fi
 echo "[precommit] OK"
