@@ -9,8 +9,39 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions sized to cores locally (on a real cluster AQE coalesces
   * from a higher initial number), UTC session time (reference assumes UTC
   * everywhere — see SURVEY.md §1.2 / reference `stream_sim.py:73-75`).
+  *
+  * Generated code is reused across requests. Spark compiles each
+  * whole-stage and expression class once and keeps it in a codegen cache
+  * of `spark.sql.codegen.cache.maxEntries` classes, 100 by default. The
+  * engine's working set is larger. Counted on a fresh JVM with an
+  * unbounded cache (sf0.01, 4 cores), the 8 dashboard queries and 4
+  * curation jobs of the analytics benchmark generate 227 distinct classes
+  * and the 337 oracle-gated queries 3,503. At 100 entries every pass over
+  * the dashboard and curation set evicts its own classes and compiles
+  * them all again, at 13–25 ms a class. [[CodegenCacheEntries]] holds the
+  * whole oracle surface with room for plans that differ at other scales.
+  * The cost is metaspace: after the 337-query run, with the classes
+  * held, Metaspace read 229 MB and Compressed Class Space 29 MB, against
+  * 200 MB and 25 MB at 100 entries.
+  *
+  * Generated class names leave out the codegen stage id
+  * (`spark.sql.codegen.useIdInClassName`). Adaptive execution numbers a
+  * query's stages in the order their inputs finish, so the same stage
+  * can get another id on a later run; with the id in the class name its
+  * class is a new cache key and is compiled again (the first repeat of
+  * `cohort_analysis_e2e` compiled 4–8 classes that way). The plan still
+  * shows each stage's id.
+  *
+  * JVM scope: the codegen cache is one per JVM, built when code is first
+  * generated, and takes its bound from the session active at that moment.
+  * The first session in a JVM therefore fixes the bound for every later
+  * session; every engine session is built through [[configure]], so all
+  * of them agree.
   */
 object GraftSession {
+
+  /** Bound of Spark's JVM-wide codegen class cache (see the object doc). */
+  private val CodegenCacheEntries: Int = 5000
 
   /** Configs every Graft session needs regardless of master. Installs the
     * engine's Catalyst extensions (DateCastRewrite) — a no-op when an
@@ -33,6 +64,8 @@ object GraftSession {
       // µs timestamps on write: unambiguous for the DuckDB oracle compare.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

@@ -1,12 +1,17 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import graft.{GraftSession, SparkEntry}
 
 /** Empirical profiler (guide §1.1 with spark.ui.enabled=false): run one
   * query warm, then measured, and print per-stage wall/task-time/shuffle
   * bytes sorted by duration — the "which stage is slow" answer the Spark
-  * UI would give.
+  * UI would give. The TOTAL line also counts the generated classes the
+  * measured run compiled and their compile time: a warm run should
+  * compile none, so a non-zero count says the query paid for codegen
+  * again.
   *
   * `runMain graft.tools.StageProfile <query> [sfDir] [cpus]`
   */
@@ -42,9 +47,13 @@ object StageProfile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val t0 = System.nanoTime()
     once()
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     // Listener events arrive on an async bus: drain it before reading the
     // rows buffer, or the final stages' completions can be silently
     // dropped (r16 advice). waitUntilEmpty is what Spark's own tests use.
@@ -53,7 +62,8 @@ object StageProfile {
     catch { case _: Throwable => Thread.sleep(1000) }
     spark.sparkContext.removeSparkListener(listener)
     println(f"TOTAL $q wall=$wall%.3f s, stages=${rows.size}, " +
-      f"sum(stage wall)=${rows.map(_.ms).sum / 1e3}%.3f s")
+      f"sum(stage wall)=${rows.map(_.ms).sum / 1e3}%.3f s, " +
+      f"codegen compiles=$compiles ($compileMs%.0f ms)")
     rows.sortBy(-_.ms).take(40).foreach { r =>
       println(f"${r.ms}%6d ms  task=${r.taskMs}%7d ms  " +
         f"shufR=${r.shufRead}%9d shufW=${r.shufWrite}%9d  [${r.id}%3d] ${r.name.take(110)}")

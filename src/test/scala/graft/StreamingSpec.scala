@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +13,27 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def us(min: Long): Long = min * 60L * 1000000L
+
+  /** The admission datacard judged on one drift arm: the arms not named
+    * read one constant column on both sides under thresholds that always
+    * pass, so `admitted` is the Wilson bound ∧ the named arm (a source
+    * without reference rows still reads no vector evidence: false).
+    */
+  private def datacardArm(batch: DataFrame, reference: DataFrame,
+                          quality: Column, minWilsonLo: Double,
+                          valueCol: String = "same_v", catCol: String = "same_c",
+                          vecCol: String = "same_e",
+                          maxKs: Double = Double.PositiveInfinity,
+                          maxJs: Double = Double.PositiveInfinity,
+                          minCentroidCos: Double = Double.NegativeInfinity,
+                          maxNormDelta: Double = Double.PositiveInfinity): DataFrame = {
+    def same(df: DataFrame) = df.withColumn("same_v", lit(1.0))
+      .withColumn("same_c", lit("x")).withColumn("same_e", array(lit(1.0)))
+    graft.streaming.StreamAdmission.admissionDatacard(same(batch), same(reference),
+      "source", valueCol, catCol, vecCol, quality, minWilsonLo,
+      maxPsi = Double.PositiveInfinity, maxKs = maxKs, maxJs = maxJs,
+      minCentroidCos = minCentroidCos, maxNormDelta = maxNormDelta)
+  }
 
   private val batches: Seq[Seq[Point]] = Seq(
     Seq(Point(1, us(0), 10.0), Point(1, us(1), 20.0), Point(2, us(0), 5.0)),
@@ -1148,10 +1170,10 @@ class StreamingSpec extends AnyFunSuite {
     // maximal drift D = 1.0; the recovered batch-2 b interleaves the
     // reference grid (D ≈ 0.1) and re-admits. Same verdicts as PSI here;
     // the statistics differ (binning-free sup-norm vs binned divergence).
-    val rep1 = graft.streaming.StreamAdmission.admissionReportKs(
+    val rep1 = datacardArm(
         batch1.toDF("source", "doc_id", "n_chars", "text"), reference,
-        "source", "n_chars", col("n_chars") > 50,
-        minWilsonLo = 0.5, maxKs = 0.4)
+        col("n_chars") > 50, minWilsonLo = 0.5, valueCol = "n_chars",
+        maxKs = 0.4)
       .select("source", "ks", "admitted")
       .as[(String, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -1159,9 +1181,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(rep1("a")._2 && !rep1("c")._2, rep1.toString)
     val batch2Df = batch2.toDF("source", "doc_id", "n_chars", "text")
     val adm2 = graft.streaming.StreamAdmission.admit(batch2Df,
-      graft.streaming.StreamAdmission.admissionReportKs(batch2Df, reference,
-        "source", "n_chars", col("n_chars") > 50, minWilsonLo = 0.5,
-        maxKs = 0.4), "source")
+      datacardArm(batch2Df, reference, col("n_chars") > 50,
+        minWilsonLo = 0.5, valueCol = "n_chars", maxKs = 0.4), "source")
       .select("doc_id").as[String].collect().toSet
     assert(adm2 == batch2.map(_._2).toSet, s"batch-2 all re-admitted: $adm2")
     graft.ops.OpCaches.releaseAll()
@@ -1172,8 +1193,8 @@ class StreamingSpec extends AnyFunSuite {
     // re-ingest must pass admission yet drop at the novelty gate.
     def admitKsBatch(df: org.apache.spark.sql.DataFrame) =
       graft.streaming.StreamAdmission.admit(df,
-        graft.streaming.StreamAdmission.admissionReportKs(df, reference, "source",
-          "n_chars", col("n_chars") > 50, minWilsonLo = 0.5, maxKs = 0.4),
+        datacardArm(df, reference, col("n_chars") > 50, minWilsonLo = 0.5,
+          valueCol = "n_chars", maxKs = 0.4),
         "source")
     val input2 = MemoryStream[(String, String, Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, Long, String)]],
@@ -1256,10 +1277,10 @@ class StreamingSpec extends AnyFunSuite {
         (1 to 4).map(i => doc("d", s"d2$i", "en", 60L))
     val splits = Seq(batch1, batch2)
 
-    val rep1 = graft.streaming.StreamAdmission.admissionReportJs(
+    val rep1 = datacardArm(
         batch1.toDF("source", "doc_id", "lang", "n_chars", "text"),
-        reference, "source", "lang", col("n_chars") > 50,
-        minWilsonLo = 0.5, maxJs = 0.2)
+        reference, col("n_chars") > 50, minWilsonLo = 0.5, catCol = "lang",
+        maxJs = 0.2)
       .select("source", "js", "admitted")
       .as[(String, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -1268,10 +1289,10 @@ class StreamingSpec extends AnyFunSuite {
     assert(rep1("a")._2, rep1.toString)
     assert(rep1("a")._1 == 0.0, s"identical mix must read js=0: $rep1")
     assert(!rep1("c")._2, rep1.toString)
-    val rep2 = graft.streaming.StreamAdmission.admissionReportJs(
+    val rep2 = datacardArm(
         batch2.toDF("source", "doc_id", "lang", "n_chars", "text"),
-        reference, "source", "lang", col("n_chars") > 50,
-        minWilsonLo = 0.5, maxJs = 0.2)
+        reference, col("n_chars") > 50, minWilsonLo = 0.5, catCol = "lang",
+        maxJs = 0.2)
       .select("source", "js", "admitted")
       .as[(String, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -1285,8 +1306,8 @@ class StreamingSpec extends AnyFunSuite {
     // must equal the per-split batch recompute.
     def admitJsBatch(df: org.apache.spark.sql.DataFrame) =
       graft.streaming.StreamAdmission.admit(df,
-        graft.streaming.StreamAdmission.admissionReportJs(df, reference, "source",
-          "lang", col("n_chars") > 50, minWilsonLo = 0.5, maxJs = 0.2),
+        datacardArm(df, reference, col("n_chars") > 50, minWilsonLo = 0.5,
+          catCol = "lang", maxJs = 0.2),
         "source")
     val input = MemoryStream[(String, String, String, Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, String, Long, String)]],
@@ -1357,20 +1378,20 @@ class StreamingSpec extends AnyFunSuite {
     val batch3 = (1 to 6).map(i => doc("b", s"b3$i", vec(1, 0.01 * i), 60L))
     val splits = Seq(batch1, batch2, batch3)
 
-    val rep1 = graft.streaming.StreamAdmission.admissionReportEmbedding(
+    val rep1 = datacardArm(
         batch1.toDF("source", "doc_id", "emb", "n_chars", "text"),
-        reference, "source", "emb", col("n_chars") > 50,
-        minWilsonLo = 0.5, minCentroidCos = 0.8, maxNormDelta = 0.2)
+        reference, col("n_chars") > 50, minWilsonLo = 0.5, vecCol = "emb",
+        minCentroidCos = 0.8, maxNormDelta = 0.2)
       .select("source", "centroid_cosine", "norm_ratio", "admitted")
       .as[(String, Double, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(rep1("a")._3 && rep1("a")._1 > 0.99, rep1.toString)
     assert(!rep1("b")._3 && rep1("b")._1 < 0.2,
       s"rotated centroid must reject: $rep1")
-    val rep2 = graft.streaming.StreamAdmission.admissionReportEmbedding(
+    val rep2 = datacardArm(
         batch2.toDF("source", "doc_id", "emb", "n_chars", "text"),
-        reference, "source", "emb", col("n_chars") > 50,
-        minWilsonLo = 0.5, minCentroidCos = 0.8, maxNormDelta = 0.2)
+        reference, col("n_chars") > 50, minWilsonLo = 0.5, vecCol = "emb",
+        minCentroidCos = 0.8, maxNormDelta = 0.2)
       .select("source", "centroid_cosine", "norm_ratio", "admitted")
       .as[(String, Double, Double, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
@@ -1381,9 +1402,8 @@ class StreamingSpec extends AnyFunSuite {
     // Ordered-splits parity (same loop shape as the KS/JS arms).
     def admitEmbBatch(df: org.apache.spark.sql.DataFrame) =
       graft.streaming.StreamAdmission.admit(df,
-        graft.streaming.StreamAdmission.admissionReportEmbedding(df, reference,
-          "source", "emb", col("n_chars") > 50, minWilsonLo = 0.5,
-          minCentroidCos = 0.8, maxNormDelta = 0.2),
+        datacardArm(df, reference, col("n_chars") > 50, minWilsonLo = 0.5,
+          vecCol = "emb", minCentroidCos = 0.8, maxNormDelta = 0.2),
         "source")
     val input = MemoryStream[(String, String, Seq[Double], Long, String)](
       implicitly[org.apache.spark.sql.Encoder[(String, String, Seq[Double], Long, String)]],

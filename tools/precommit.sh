@@ -36,11 +36,23 @@ if [ "${GRAFT_PRECOMMIT_NOSPEC:-0}" != "1" ]; then
   # Suites are named from their `class`/`object` declarations, not from
   # file names: a file may be named by subject while its class keeps an
   # older name (StatisticsOpsSpec.scala holds Round11OpsSpec).
+  SUITE='^(final )?(class|object) [A-Za-z0-9_]+(Spec|Properties)\b'
+  naming() { grep -rlE "\b$1\b" src/test/scala --include='*.scala' 2>/dev/null || true; }
   SPECS=""
   for c in $CHANGED; do
-    SPECS="$SPECS $(grep -rlE "\b$c\b" src/test/scala/graft \
-      --include='*.scala' 2>/dev/null | xargs -r grep -hoE \
-      '^(final )?(class|object) [A-Za-z0-9_]+(Spec|Properties)\b' |
+    FILES=$(naming "$c")
+    # A test file that names the class but declares no suite is a helper
+    # (TestSpark names GraftSession, and every suite reaches it through
+    # TestSpark): the suites that name the helper are selected too, one
+    # level deep.
+    for f in $FILES; do
+      grep -qE "$SUITE" "$f" && continue
+      for h in $(grep -hoE '^(final )?(case )?(class|object|trait) [A-Za-z0-9_]+' \
+          "$f" | awk '{print $NF}'); do
+        FILES="$FILES $(naming "$h")"
+      done
+    done
+    SPECS="$SPECS $(echo "$FILES" | xargs -r grep -hoE "$SUITE" |
       awk '{print $NF}')"
   done
   SPECS=$(echo "$SPECS" | tr ' ' '\n' | grep -E 'Spec$|Properties$' |
