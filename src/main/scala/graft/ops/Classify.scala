@@ -66,21 +66,6 @@ object Classify {
         log(col("__nd").cast("double") / col("__ndt")).as("logprior"))
   }
 
-  /** Persist a fitted model (fit once on the training corpus, apply
-    * forever at ingest — the same artifact contract as `Similarity.ivfSave`
-    * / `pqSave`). The model is |labels| × dim rows of plain columns, so
-    * parquet round-trips it exactly.
-    */
-  def nbSave(model: DataFrame, path: String): Unit =
-    model.write.mode("overwrite").parquet(path)
-
-  /** Load a persisted model for [[naiveBayesPredict]]. The fit contract is
-    * the canonical `label` column NAME (order-insensitive) — a projected or
-    * reordered model still binds correctly.
-    */
-  def nbLoad(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** Predict: one row per document that has at least one token (the same
     * totality contract as the DSIR weigher — tokenless docs have no
     * evidence and no row). Output: `(idCol, pred, score)` where `pred` is

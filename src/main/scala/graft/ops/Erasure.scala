@@ -3,29 +3,18 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Right-to-erasure (GDPR Art. 17 / CCPA delete) propagation: purge a
-  * subject-id set from every table keyed by it, plus the audit report
-  * compliance actually requires.
+/** Right-to-erasure (GDPR Art. 17 / CCPA delete) propagation: the audit
+  * report compliance requires when a subject-id set is purged from every
+  * table keyed by it (each purge is the caller's broadcast anti join).
   *
   * Scale shape: an erasure request list is bounded-small BY NATURE
   * (regulatory requests, not data) — the one case where a broadcast
   * hint is correct by construction, unlike the O(corpus) cluster maps
-  * the dedup ops deliberately leave to AQE. Each table purge is then a
-  * single-pass broadcast anti join (no shuffle of the table), and each
-  * audit row costs ONE scan (left join + conditional count), so a
-  * 100-table erasure run is 100 embarrassingly-parallel scans.
+  * the dedup ops deliberately leave to AQE. Each audit row costs ONE
+  * scan (left join + conditional count), so a 100-table erasure run is
+  * 100 embarrassingly-parallel scans.
   */
 object Erasure {
-
-  private def idSet(ids: DataFrame, idCol: String, as: String) =
-    broadcast(ids.select(col(idCol).as(as)).distinct())
-
-  /** The purged view of `df`: rows whose `keyCol` appears in the erasure
-    * set are gone. Writers overwrite the table with this.
-    */
-  def forget(df: DataFrame, keyCol: String,
-             ids: DataFrame, idCol: String): DataFrame =
-    df.join(idSet(ids, idCol, keyCol), Seq(keyCol), "left_anti")
 
   /** Audit report over (name, table, keyCol) triples: per table, total
     * rows, rows the erasure set matches, and rows that would remain.

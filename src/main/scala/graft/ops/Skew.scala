@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   *
   * AQE's skew-join splitting (enabled in GraftSession) handles sort-merge
   * skew at runtime; explicit salting remains necessary when a hot key must
-  * flow through a shuffle HASH join or aggregation whose single reducer
-  * would otherwise be the straggler.
+  * flow through a shuffle HASH join whose single reducer would otherwise
+  * be the straggler.
   */
 object Skew {
 
@@ -25,20 +25,6 @@ object Skew {
       explode(sequence(lit(0), lit(salts - 1))))
     bigS.join(smallS, keys :+ "__salt").drop("__salt")
   }
-
-  /** Two-phase (salted) aggregation: partial agg on (key, salt), final agg
-    * on key — splits a hot group across `salts` partial reducers. `aggs`
-    * maps output column → (partialExpr, finalExpr) column names are applied
-    * in order. Provided for count/sum-like decomposable aggregates.
-    */
-  def saltedSumCount(df: DataFrame, keys: Seq[String], valueCol: String,
-                     salts: Int): DataFrame =
-    df.withColumn("__salt", pmod(hash(monotonically_increasing_id()), lit(salts)))
-      .groupBy((keys :+ "__salt").map(col): _*)
-      .agg(sum(col(valueCol)).as("__psum"), count(lit(1)).as("__pcnt"))
-      .groupBy(keys.map(col): _*)
-      .agg(sum(col("__psum")).as(s"sum_$valueCol"),
-        sum(col("__pcnt")).as("n"))
 
   /** Skew diagnosis report — the measurement that decides WHEN the guards
     * above (and the df caps / salting elsewhere) are needed, instead of

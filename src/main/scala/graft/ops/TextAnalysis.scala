@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -430,40 +430,6 @@ object TextAnalysis {
         size(col("__t")).cast("long").as("n_tokens"),
         concat_ws(" ", slice(col("__t"), 1, 32)).as("tokens_head"))
 
-  /** Learn a BPE merge list from the corpus — the standard trainer loop
-    * (Sennrich et al. 2016): per iteration, re-segment every word with the
-    * merges learned so far, count adjacent TOKEN pairs corpus-wide, and
-    * adopt the most frequent pair (count desc, pair asc tie-break) as the
-    * next merge. One distributed aggregation per iteration, one row to
-    * the driver per iteration — `nMerges` passes total, the classic
-    * trade-off (tokenizer training is run once per corpus, not per
-    * query). Segmentation happens INSIDE a per-word lambda so pairs never
-    * cross word boundaries.
-    */
-  def bpeLearn(docs: DataFrame, textCol: String, nMerges: Int): Seq[(String, String)] = {
-    import graft.functions.BpeFunctions
-    var merges = Vector.empty[(String, String)]
-    var exhausted = false
-    while (merges.length < nMerges && !exhausted) {
-      val toks = transform(words(col(textCol)),
-        w => BpeFunctions.bpeEncode(w, merges))
-      val top = docs.select(explode(toks).as("__ts"))
-        .filter(size(col("__ts")) >= 2)
-        .select(explode(transform(sequence(lit(0), size(col("__ts")) - 2),
-          i => struct(element_at(col("__ts"), i + 1).as("a"),
-            element_at(col("__ts"), i + 2).as("b")))).as("__p"))
-        .groupBy(col("__p")).agg(count(lit(1)).as("__n"))
-        .orderBy(col("__n").desc, col("__p"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val p = top.head.getStruct(0)
-        merges :+= ((p.getString(0), p.getString(1)))
-      }
-    }
-    merges
-  }
-
   /** Compression-ratio quality signal: deflate(text)/raw bytes — low
     * ratios flag repetitive/templated/generated text that token-level
     * heuristics miss (long-range repetition). Per-row projection via the
@@ -782,42 +748,52 @@ object TextAnalysis {
   }
 
   /** Rule-based quality gate (the Gopher/C4 recipe): per-document boolean
-    * flags for word-count bounds, mean word length, stopword presence, and
-    * symbol share, plus the conjunctive `pass_all`. Unlike [[quality]]'s
-    * soft score, rules give auditable REASONS a document was dropped —
-    * the per-flag columns aggregate into the rejection report a curation
-    * run publishes. Pure per-row expressions, fully codegen'd, no shuffle;
-    * thresholds compare unrounded doubles that both engines derive from
-    * the same integer counts, so the cut is engine-exact.
+    * flags for word-count bounds (50–100000), mean word length (3–10),
+    * stopword presence (≥ 2 hits), and symbol share (≤ 0.1), plus the
+    * conjunctive `pass_all`. Unlike [[quality]]'s soft score, rules give
+    * auditable REASONS a document was dropped — the per-flag columns
+    * aggregate into the rejection report a curation run publishes. Pure
+    * per-row expressions, fully codegen'd, no shuffle; thresholds compare
+    * unrounded doubles that both engines derive from the same integer
+    * counts, so the cut is engine-exact.
     */
-  def ruleFlags(docs: DataFrame, idCol: String, textCol: String,
-                minWords: Long = 50, maxWords: Long = 100000,
-                minAvgWordLen: Double = 3.0, maxAvgWordLen: Double = 10.0,
-                minStopwordHits: Long = 2,
-                maxSymbolRatio: Double = 0.1): DataFrame = {
-    val ws = words(col(textCol))
-    val base = docs.select(
-      col(idCol),
-      size(ws).cast("long").as("n_words"),
-      (wordCharSum(ws).cast("double") / size(ws)).as("__awl"),
-      stopwordCount(ws).cast("long").as("stopword_hits"),
-      (regexp_count(col(textCol), lit("[^a-z0-9 ]")).cast("double") /
-        greatest(length(col(textCol)), lit(1))).as("__sym"))
-    base.select(
-      col(idCol), col("n_words"),
-      round(col("__awl"), 6).as("avg_word_len"),
-      col("stopword_hits"),
-      round(col("__sym"), 6).as("symbol_ratio"),
-      (col("n_words") >= minWords && col("n_words") <= maxWords)
-        .cast("int").as("flag_words"),
-      (col("__awl") >= minAvgWordLen && col("__awl") <= maxAvgWordLen)
-        .cast("int").as("flag_word_len"),
-      (col("stopword_hits") >= minStopwordHits).cast("int").as("flag_stopwords"),
-      (col("__sym") <= maxSymbolRatio).cast("int").as("flag_symbols"))
-      .withColumn("pass_all",
-        (col("flag_words") === 1 && col("flag_word_len") === 1 &&
-          col("flag_stopwords") === 1 && col("flag_symbols") === 1).cast("int"))
+  def ruleFlags(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (nWords, awl, hits, sym) = ruleMeasures(col(textCol))
+    val base = docs.select(col(idCol), nWords.as("n_words"), awl.as("__awl"),
+      hits.as("stopword_hits"), sym.as("__sym"))
+    val checks = ruleChecks(col("n_words"), col("__awl"), col("stopword_hits"),
+      col("__sym"))
+    base.select(Seq(col(idCol), col("n_words"),
+        round(col("__awl"), 6).as("avg_word_len"), col("stopword_hits"),
+        round(col("__sym"), 6).as("symbol_ratio")) ++
+      checks.zip(Seq("flag_words", "flag_word_len", "flag_stopwords",
+        "flag_symbols")).map { case (c, n) => c.cast("int").as(n) } :+
+      checks.reduce(_ && _).cast("int").as("pass_all"): _*)
   }
+
+  /** [[ruleFlags]]' `pass_all` as one boolean column over the text — for
+    * composites that only keep the passing docs: a filter on the scan
+    * row, where joining the flag frame back on the id paid a full-corpus
+    * self-join for values the row already holds.
+    */
+  def rulePassCol(t: Column): Column =
+    (ruleChecks _).tupled(ruleMeasures(t)).reduce(_ && _)
+
+  /** [[ruleFlags]]' per-row measures, unrounded: word count, mean word
+    * length, stopword hits, symbol share. */
+  private def ruleMeasures(t: Column): (Column, Column, Column, Column) = {
+    val ws = words(t)
+    (size(ws).cast("long"), wordCharSum(ws).cast("double") / size(ws),
+      stopwordCount(ws).cast("long"),
+      regexp_count(t, lit("[^a-z0-9 ]")).cast("double") /
+        greatest(length(t), lit(1)))
+  }
+
+  /** The four rule checks over [[ruleMeasures]], in flag order. */
+  private def ruleChecks(nWords: Column, awl: Column, hits: Column,
+                         sym: Column): Seq[Column] =
+    Seq(nWords >= 50L && nWords <= 100000L, awl >= 3.0 && awl <= 10.0,
+      hits >= 2L, sym <= 0.1)
 
   /** BM25 keyword retrieval over a BOUNDED query-term set: per-document
     * Okapi BM25 score for `terms`, distributed top-`k` result.

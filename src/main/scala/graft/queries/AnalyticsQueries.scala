@@ -669,11 +669,8 @@ object AnalyticsQueries {
     // at temporal drift, binning-free companion to psiByGroup; each side
     // is per-group sorted value cells, never a global cross join.
     "dq_ks_by_source" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      Stats.ksByGroup(
-        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-        "n_chars", "source")
+      val (ref, cur) = TextQueries.snapshotSplit(Tables.documents(s, dir))
+      Stats.ksByGroup(ref, cur, "n_chars", "source")
     },
 
     // L296: per-source CATEGORICAL drift — Jensen–Shannon divergence of
@@ -681,22 +678,16 @@ object AnalyticsQueries {
     // category-column member of the drift family (PSI = binned numeric,
     // KS = continuous numeric, JS = categorical). Bounded by ln 2.
     "dq_js_by_source" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      Stats.jsByGroup(
-        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-        "lang", "source")
+      val (ref, cur) = TextQueries.snapshotSplit(Tables.documents(s, dir))
+      Stats.jsByGroup(ref, cur, "lang", "source")
     },
 
     // L284 standalone: per-source PSI on the same snapshot split —
     // isolates psiByGroup for drift detection independent of the
     // admission composites that consume it.
     "dq_psi_by_source" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      Stats.psiByGroup(
-        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-        "n_chars", "source")
+      val (ref, cur) = TextQueries.snapshotSplit(Tables.documents(s, dir))
+      Stats.psiByGroup(ref, cur, "n_chars", "source")
     },
 
     // L308: per-source PSI on EQUAL-MASS reference-quantile bins — the
@@ -704,11 +695,8 @@ object AnalyticsQueries {
     // skewed column in bin 0); exact order-statistic edges via the
     // range-partitioned rank recipe, applied map-side to both snapshots.
     "dq_psi_by_source_quantile" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      Stats.psiByGroupQuantile(
-        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-        "n_chars", "source")
+      val (ref, cur) = TextQueries.snapshotSplit(Tables.documents(s, dir))
+      Stats.psiByGroupQuantile(ref, cur, "n_chars", "source")
     },
 
     // L300: UNIFIED DRIFT DATACARD — one row per source carrying the
@@ -720,10 +708,9 @@ object AnalyticsQueries {
       val emb = Tables.embeddings(s, dir)
         .select(col("vec_id").as("doc_id"), col("embedding"))
       val j = Tables.documents(s, dir).join(emb, Seq("doc_id"))
-      DataQuality.driftDatacard(
-        j.filter(pmod(col("doc_id"), lit(3)) === 0),
-        j.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-        "source", "n_chars", "lang", "embedding")
+      val (ref, cur) = TextQueries.snapshotSplit(j)
+      DataQuality.driftDatacard(ref, cur, "source", "n_chars", "lang",
+        "embedding")
     },
 
     // L231: rendezvous-hash shard assignment (8 shards) — map-side,

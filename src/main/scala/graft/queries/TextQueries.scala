@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, OpCaches, TextAnalysis}
+import graft.ops.{DataQuality, Dedup, OpCaches, Sampling, Stats, TextAnalysis}
 import graft.sources.Tables
 
 /** Training-data-pipeline text operators over the `documents` table:
@@ -196,13 +196,93 @@ object TextQueries {
        |  PARTITION BY doc_id ORDER BY score DESC, lang) AS rn FROM nbsc)""".stripMargin
 
   // Fixed English merge list for the BPE-apply gate (priority-ordered;
-  // real deployments feed a learned artifact — see the mine→apply spec).
+  // real deployments feed a learned artifact).
   private[graft] val GateBpeMerges: Seq[(String, String)] = Seq(
     "t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n", "e" -> "r", "o" -> "n",
     "r" -> "e", "a" -> "t", "e" -> "n", "o" -> "r", "an" -> "d", "in" -> "g",
     "o" -> "u", "s" -> "t", "e" -> "s", "a" -> "r", "o" -> "f", "i" -> "s",
     "i" -> "t", "a" -> "l", "e" -> "d", "er" -> "s", "c" -> "h", "l" -> "e",
     "r" -> "o", "m" -> "e", "b" -> "e", "w" -> "h", "n" -> "d", "u" -> "r")
+
+  // The yesterday/today snapshot split of a frame keyed by doc_id, as
+  // (ref, cur): doc_id % 3 = 0 stands in for the reference crawl.
+  private[queries] def snapshotSplit(df: DataFrame): (DataFrame, DataFrame) =
+    (df.filter(pmod(col("doc_id"), lit(3)) === 0),
+      df.filter(pmod(col("doc_id"), lit(3)) =!= 0))
+
+  // Curation stages shared by the pipeline bodies below.
+
+  // Two synthetic versions of the corpus for the snapshot-diff gates, as
+  // (old, new): drops on either side plus an in-place edit of the docs
+  // with doc_id % 11 = 3.
+  private def corpusVersions(docs: DataFrame): (DataFrame, DataFrame) =
+    (docs.filter(col("doc_id") % 5 =!= 1),
+      docs.filter(col("doc_id") % 7 =!= 2)
+        .withColumn("text", when(col("doc_id") % 11 === 3,
+          concat(col("text"), lit(" v2"))).otherwise(col("text"))))
+
+  // The new version's added and changed docs, with their diff `status`.
+  private def freshDocs(oldSnap: DataFrame, newSnap: DataFrame): DataFrame =
+    newSnap.join(Dedup.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
+        .filter(col("status").isin("added", "changed"))
+        .select(col("doc_id"), col("status")), Seq("doc_id"))
+
+  // Rule gate: the docs passing every ruleFlags check, as a filter on
+  // the row (TextAnalysis.rulePassCol), not a join of the flag frame.
+  private def ruleGate(docs: DataFrame): DataFrame =
+    docs.filter(TextAnalysis.rulePassCol(col("text")))
+
+  // Near-dup victim removal: drops the doc_b side of every pair at
+  // Jaccard >= 0.8 mined over `corpus`, by a left-anti join on doc_id.
+  private def dropDupVictims(corpus: DataFrame): DataFrame => DataFrame = {
+    val victims = Dedup.nearDuplicates(corpus, "doc_id", "text",
+        minJaccard = 0.8)
+      .select(col("doc_b").as("doc_id")).distinct()
+    _.join(victims, Seq("doc_id"), "left_anti")
+  }
+
+  // Per-source admission: the Wilson 95% lower bound of the long-doc
+  // share (n_chars > 300) over `docs`, joined to ONE n_chars drift arm of
+  // `cur` against `ref` — "psi" (Stats.psiByGroup, 10 bins) or "ks"
+  // (Stats.ksByGroup) — and the verdict wilson_lo >= 0.25 and
+  // drift <= maxDrift as `admitted`. |sources|-bounded.
+  private def admission(docs: DataFrame, ref: DataFrame, cur: DataFrame,
+                        arm: String, maxDrift: Double): DataFrame = {
+    val drift = arm match {
+      case "psi" => Stats.psiByGroup(ref, cur, "n_chars", "source")
+      case "ks" => Stats.ksByGroup(ref, cur, "n_chars", "source")
+    }
+    DataQuality.wilsonShare(docs, "source", col("n_chars") > 300)
+      .select(col("source"), col("n").as("n_docs"), col("wilson_lo"))
+      .join(drift.select(col("source"), col(arm)), Seq("source"))
+      .withColumn("admitted", col("wilson_lo") >= 0.25 && col(arm) <= maxDrift)
+  }
+
+  // Curation v6/v7 body: the docs of the admitted sources through the
+  // rule gate and a deterministic 50% hash sample.
+  private def admittedCuration(arm: String, maxDrift: Double): Q = { (s, dir) =>
+    val docs = Tables.documents(s, dir)
+    val (ref, cur) = snapshotSplit(docs)
+    val admitted = admission(docs, ref, cur, arm, maxDrift)
+      .filter(col("admitted")).select(col("source"))
+    ruleGate(docs).join(broadcast(admitted), Seq("source"))
+      .transform(d => Sampling.bernoulli(d, "doc_id", 0.5))
+      .select(col("doc_id"), col("source"), col("n_chars"))
+  }
+
+  // Corpus admission report body: one row per source with the Wilson
+  // bound, the PSI drift score (and the verdict arm's own score when it
+  // is not PSI) and the verdict as 0/1.
+  private def admissionReport(arm: String, maxDrift: Double): Q = { (s, dir) =>
+    val docs = Tables.documents(s, dir)
+    val (ref, cur) = snapshotSplit(docs)
+    val report = admission(docs, ref, cur, arm, maxDrift)
+    val scores = if (arm == "psi") report
+      else report.join(Stats.psiByGroup(ref, cur, "n_chars", "source")
+        .select(col("source"), col("psi")), Seq("source"))
+    scores.select(Seq("source", "n_docs", "wilson_lo", "psi", arm).distinct
+      .map(col) :+ col("admitted").cast("int").as("admitted"): _*)
+  }
 
   def defs: Map[String, Q] = Map(
     // BPE tokenizer application (merge list as plan-time artifact,
@@ -224,10 +304,7 @@ object TextQueries {
     // hashes, reported per source. The between-ingest-runs audit step.
     "corpus_snapshot_diff" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val oldSnap = docs.filter(col("doc_id") % 5 =!= 1)
-      val newSnap = docs.filter(col("doc_id") % 7 =!= 2)
-        .withColumn("text", when(col("doc_id") % 11 === 3,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
+      val (oldSnap, newSnap) = corpusVersions(docs)
       graft.ops.Dedup.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source"), col("status"))
@@ -521,17 +598,10 @@ object TextQueries {
     // scoring a daily delta and rescoring the world.
     "curation_incremental" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val oldSnap = docs.filter(col("doc_id") % 5 =!= 1)
-      val newSnap = docs.filter(col("doc_id") % 7 =!= 2)
-        .withColumn("text", when(col("doc_id") % 11 === 3,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
-      val fresh = newSnap.join(
-        graft.ops.Dedup.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-          .filter(col("status").isin("added", "changed"))
-          .select(col("doc_id"), col("status")), Seq("doc_id"))
-      val quality = TextAnalysis.quality(fresh, "doc_id", "text")
-        .select(col("doc_id"), round(col("quality_score"), 6).as("quality_score"))
-      fresh.join(quality, Seq("doc_id"))
+      val (oldSnap, newSnap) = corpusVersions(docs)
+      freshDocs(oldSnap, newSnap)
+        .withColumn("quality_score",
+          round(TextAnalysis.qualityScoreCol(col("text")), 6))
         .select(col("doc_id"), col("status"), col("source"),
           col("quality_score"), (col("quality_score") >= 0.5).as("admitted"))
     },
@@ -550,27 +620,19 @@ object TextQueries {
     // corpus docs are flagged.
     "e2e_incremental_session" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val oldSnap = docs.filter(col("doc_id") % 5 =!= 1)
-      val newSnap = docs.filter(col("doc_id") % 7 =!= 2)
-        .withColumn("text", when(col("doc_id") % 11 === 3,
-          concat(col("text"), lit(" v2"))).otherwise(col("text")))
+      val (oldSnap, newSnap) = corpusVersions(docs)
       // The BATCH-sized frame is scope-cached (four consumers: the probe
       // shingles, the Wilson arm, the PSI current side, and the final
       // select); the corpus-sized oldSnap deliberately is NOT — at 100 TB
       // the history side must never be pinned, which is the whole point
       // of the signature store.
-      val fresh = graft.ops.OpCaches.scoped(newSnap.join(
-        graft.ops.Dedup.snapshotDiff(oldSnap, newSnap, "doc_id", "text")
-          .filter(col("status").isin("added", "changed"))
-          .select(col("doc_id"), col("status")), Seq("doc_id")))
+      val fresh = OpCaches.scoped(freshDocs(oldSnap, newSnap))
       val store = Dedup.minhashStore(oldSnap, "doc_id", "text")
       val dups = Dedup.incrementalPairsSignatureStore(fresh, store,
           "doc_id", "text", minJaccardEst = 0.5)
         .select(col("new_id").as("doc_id")).distinct()
         .withColumn("__dup", lit(true))
-      val adm = graft.streaming.StreamAdmission.admissionReport(
-          fresh, oldSnap, "source", "n_chars", col("n_chars") > 300,
-          minWilsonLo = 0.25, maxPsi = 0.5)
+      val adm = admission(fresh, oldSnap, fresh, "psi", maxDrift = 0.5)
         .select(col("source"), col("admitted"))
       fresh.join(broadcast(adm), Seq("source"))
         .join(dups, Seq("doc_id"), "left")
@@ -587,17 +649,14 @@ object TextQueries {
     // Catalyst seeing all of it at once.
     "curation_pipeline_e2e" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val quality = TextAnalysis.quality(docs, "doc_id", "text")
-        .select(col("doc_id"), col("quality_score"))
       val lang = TextAnalysis.langId(docs, "doc_id", "text")
         .select(col("doc_id"), col("predicted_lang"))
-      val dupVictims = Dedup.nearDuplicates(docs, "doc_id", "text", minJaccard = 0.8)
-        .select(col("doc_b").as("doc_id")).distinct()
-      docs.join(quality, Seq("doc_id"))
+      docs
+        .withColumn("quality_score", TextAnalysis.qualityScoreCol(col("text")))
         .join(lang, Seq("doc_id"))
         .filter(col("quality_score") >= 0.5 && col("predicted_lang") === "en")
-        .join(dupVictims, Seq("doc_id"), "left_anti")
-        .transform(d => graft.ops.Sampling.bernoulli(d, "doc_id", 0.9))
+        .transform(dropDupVictims(docs))
+        .transform(d => Sampling.bernoulli(d, "doc_id", 0.9))
         .select(col("doc_id"), col("source"),
           round(col("quality_score"), 6).as("quality_score"))
     },
@@ -617,15 +676,13 @@ object TextQueries {
       // per-doc re-agg) and the dup-victim set genuinely join.
       val lm = TextAnalysis.unigramLogProbTopV(docs, "doc_id", "text", v = 50)
         .select(col("doc_id"), round(col("mean_nll"), 6).as("mean_nll"))
-      val dupVictims = Dedup.nearDuplicates(docs, "doc_id", "text", minJaccard = 0.8)
-        .select(col("doc_b").as("doc_id")).distinct()
       docs
         .withColumn("quality_score",
           round(TextAnalysis.qualityScoreCol(col("text")), 6))
         .join(lm, Seq("doc_id"))
         .filter(col("quality_score") >= 0.5 && col("mean_nll") <= 3.402)
-        .join(dupVictims, Seq("doc_id"), "left_anti")
-        .transform(d => graft.ops.Sampling.bernoulli(d, "doc_id", 0.9))
+        .transform(dropDupVictims(docs))
+        .transform(d => Sampling.bernoulli(d, "doc_id", 0.9))
         .select(col("doc_id"), col("source"), col("quality_score"),
           col("mean_nll"))
     },
@@ -1193,25 +1250,22 @@ object TextQueries {
     // standalone gate pins.
     "curation_pipeline_v3" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val rules = TextAnalysis.ruleFlags(docs, "doc_id", "text")
-        .filter(col("pass_all") === 1).select(col("doc_id"), col("n_words"))
       val boiler = TextAnalysis.boilerplateShare(docs, "doc_id", "text",
           n = 3, maxDocFrequency = 0.004)
         .filter(col("boiler_share") <= 0.2).select(col("doc_id"))
-      val victims = Dedup.nearDuplicates(docs, "doc_id", "text",
-          minJaccard = 0.8)
-        .select(col("doc_b").as("doc_id")).distinct()
       // Scoped-cache the survivor set: tokenBudget's pre-thin consumes its
       // input twice (stratum sizes + the window), and this input is three
-      // joined corpus passes — without the cache the whole upstream runs
-      // twice (measured 9.2 s → ~4 s at sf0.1).
-      val kept = graft.ops.OpCaches.scoped(docs.join(rules, Seq("doc_id"))
+      // corpus passes — without the cache the whole upstream runs twice
+      // (measured 9.2 s → ~4 s at sf0.1).
+      val kept = OpCaches.scoped(ruleGate(docs)
         .join(boiler, Seq("doc_id"))
-        .join(victims, Seq("doc_id"), "left_anti"))
-      graft.ops.Sampling.tokenBudget(kept, "doc_id", "source", "n_chars",
+        .transform(dropDupVictims(docs)))
+      Sampling.tokenBudget(kept, "doc_id", "source", "n_chars",
           budgets = Map("src0" -> 20000L, "src1" -> 10000L),
           defaultBudget = 5000L)
-        .select(col("doc_id"), col("source"), col("n_chars"), col("n_words"))
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          size(graft.functions.TextFunctions.words(col("text"))).cast("long")
+            .as("n_words"))
     },
 
     // Round-6 composite: unicode scrub → script routing (keep
@@ -1255,14 +1309,10 @@ object TextQueries {
     // hash). Model is |labels|×256 rows (broadcast); every stage is the
     // plan shape its standalone gate pins.
     "curation_pipeline_v5" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val pass = TextAnalysis.ruleFlags(docs, "doc_id", "text")
-        .filter(col("pass_all") === 1).select(col("doc_id"))
       // Scoped-cache the survivors: NB fit reads them twice (class-bucket
       // counts + doc priors), predict once more, the hash dedup once.
-      val kept = graft.ops.OpCaches.scoped(
-        docs.select(col("doc_id"), col("source"), col("lang"), col("text"))
-          .join(pass, Seq("doc_id")))
+      val kept = OpCaches.scoped(ruleGate(Tables.documents(s, dir))
+        .select(col("doc_id"), col("source"), col("lang"), col("text")))
       val model = graft.ops.Classify.naiveBayesFit(kept, "lang", "text", dim = 256)
       val en = graft.ops.Classify
         .naiveBayesPredict(kept, model, "doc_id", "text", dim = 256)
@@ -1283,48 +1333,18 @@ object TextQueries {
     // n_chars distribution hasn't drifted vs the reference crawl snapshot
     // (psiByGroup ≤ 1.0; doc_id%3 split stands in for yesterday-vs-today,
     // as in a18). Admitted sources then flow through the rule gate and a
-    // deterministic 50% hash sample. Both admission frames are
-    // |sources|-bounded broadcasts; drift for ALL sources costs two corpus
+    // deterministic 50% hash sample. The admission frame is a
+    // |sources|-bounded broadcast; drift for ALL sources costs two corpus
     // passes (psiByGroup), not |sources| psi calls. At sf0.01 both gates
     // provably ENGAGE: wilson drops {src4,src8,src10,src19}, drift drops
     // {src4,src5,src11,src14} — 13 of 20 sources survive.
-    "curation_pipeline_v6" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val pass = TextAnalysis.ruleFlags(docs, "doc_id", "text")
-        .filter(col("pass_all") === 1).select(col("doc_id"))
-      val admQuality = graft.ops.DataQuality
-        .wilsonShare(docs, "source", col("n_chars") > 300)
-        .filter(col("wilson_lo") >= 0.25).select(col("source"))
-      val admDrift = graft.ops.Stats.psiByGroup(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-          "n_chars", "source", bins = 10)
-        .filter(col("psi") <= 1.0).select(col("source"))
-      val surv = docs.join(pass, Seq("doc_id"))
-        .join(broadcast(admQuality), Seq("source"))
-        .join(broadcast(admDrift), Seq("source"))
-      graft.ops.Sampling.bernoulli(surv, "doc_id", 0.5)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    },
+    "curation_pipeline_v6" -> admittedCuration("psi", maxDrift = 1.0),
 
     // The REPORT form of v6's admission control (L286): one row per
     // source with the Wilson lower bound, the PSI drift score, and the
     // admission verdict — what a 100 TB curation run logs per ingest
     // batch before any document moves. |sources|-bounded output.
-    "corpus_admission_report" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val wil = graft.ops.DataQuality
-        .wilsonShare(docs, "source", col("n_chars") > 300)
-        .select(col("source"), col("n").as("n_docs"), col("wilson_lo"))
-      val drift = graft.ops.Stats.psiByGroup(
-        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-        "n_chars", "source")
-      wil.join(drift, Seq("source"))
-        .select(col("source"), col("n_docs"), col("wilson_lo"), col("psi"),
-          (col("wilson_lo") >= 0.25 && col("psi") <= 1.0)
-            .cast("int").as("admitted"))
-    },
+    "corpus_admission_report" -> admissionReport("psi", maxDrift = 1.0),
 
     // Curation v7 (round-12 verdict #7): the drift arm of the admission
     // gate swapped from binned PSI to the binning-free two-snapshot KS
@@ -1332,27 +1352,10 @@ object TextQueries {
     // Both arms provably ENGAGE at sf0.01 and cut differently from v6:
     // wilson drops {src4,src8,src10,src19}, KS drops {src5,src8,src9,
     // src11,src14} — 12 of 20 sources survive (PSI's cut was a different
-    // set). Same scale shape as v6: both admission frames are
-    // |sources|-bounded broadcasts; ksByGroup's grid is per-group
+    // set). Same scale shape as v6: the admission frame is a
+    // |sources|-bounded broadcast; ksByGroup's grid is per-group
     // distinct values, never a global cross join.
-    "curation_pipeline_v7" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val pass = TextAnalysis.ruleFlags(docs, "doc_id", "text")
-        .filter(col("pass_all") === 1).select(col("doc_id"))
-      val admQuality = graft.ops.DataQuality
-        .wilsonShare(docs, "source", col("n_chars") > 300)
-        .filter(col("wilson_lo") >= 0.25).select(col("source"))
-      val admDrift = graft.ops.Stats.ksByGroup(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-          "n_chars", "source")
-        .filter(col("ks") <= 0.35).select(col("source"))
-      val surv = docs.join(pass, Seq("doc_id"))
-        .join(broadcast(admQuality), Seq("source"))
-        .join(broadcast(admDrift), Seq("source"))
-      graft.ops.Sampling.bernoulli(surv, "doc_id", 0.5)
-        .select(col("doc_id"), col("source"), col("n_chars"))
-    },
+    "curation_pipeline_v7" -> admittedCuration("ks", maxDrift = 0.35),
 
     // The v7 report: BOTH drift statistics per source (binned PSI and
     // binning-free KS) next to the Wilson bound, with the v7 verdict —
@@ -1361,23 +1364,7 @@ object TextQueries {
     // KS's sup-norm underweights). Two extra corpus scans over caching
     // the full frames — the cheaper trade at corpus scale; every output
     // is |sources|-bounded.
-    "corpus_admission_report_v7" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val ref = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-      val cur = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val wil = graft.ops.DataQuality
-        .wilsonShare(docs, "source", col("n_chars") > 300)
-        .select(col("source"), col("n").as("n_docs"), col("wilson_lo"))
-      val psi = graft.ops.Stats.psiByGroup(ref, cur, "n_chars", "source")
-        .select(col("source"), col("psi"))
-      val ks = graft.ops.Stats.ksByGroup(ref, cur, "n_chars", "source")
-        .select(col("source"), col("ks"))
-      wil.join(psi, Seq("source")).join(ks, Seq("source"))
-        .select(col("source"), col("n_docs"), col("wilson_lo"), col("psi"),
-          col("ks"),
-          (col("wilson_lo") >= 0.25 && col("ks") <= 0.35)
-            .cast("int").as("admitted"))
-    },
+    "corpus_admission_report_v7" -> admissionReport("ks", maxDrift = 0.35),
 
     // Curation v8 (round-13 verdict #6): the leakage-safe split COMPOSED
     // into the funnel — rules → near-dup pair mining (planner-banded
@@ -1394,15 +1381,12 @@ object TextQueries {
     // the ruled corpus, one components pass over the dup-bounded
     // surviving pair graph, |pairs|-bounded audit joins.
     "curation_pipeline_v8" -> { (s, dir) =>
-      val docs = Tables.documents(s, dir)
-      val pass = TextAnalysis.ruleFlags(docs, "doc_id", "text")
-        .filter(col("pass_all") === 1).select(col("doc_id"))
-      val ruled = docs.join(pass, Seq("doc_id"))
+      val ruled = ruleGate(Tables.documents(s, dir))
       val pairs = Dedup.nearDuplicates(ruled, "doc_id", "text",
           minJaccard = 0.8)
         .select(col("doc_a"), col("doc_b"))
       val sampled = OpCaches.scoped(
-        graft.ops.Sampling.bernoulli(ruled, "doc_id", 0.7)
+        Sampling.bernoulli(ruled, "doc_id", 0.7)
           .select(col("doc_id"), col("source")))
       val survPairs = OpCaches.scoped(pairs
         .join(sampled.select(col("doc_id").as("doc_a")), Seq("doc_a"))

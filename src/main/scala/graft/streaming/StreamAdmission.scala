@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{DataQuality, Stats}
+import graft.ops.DataQuality
 
 /** Per-micro-batch SOURCE ADMISSION CONTROL (L292): the batch curation
   * admission gate (curation_pipeline_v6's Wilson-quality ∧ PSI-drift
@@ -20,36 +20,11 @@ import graft.ops.{DataQuality, Stats}
   * Cache contract: [[admissionDatacard]] scope-caches one frame, the
   * reference's drift profile; a later batch re-deriving the same
   * reference finds it in the CacheManager and registers nothing, so
-  * `graft.ops.OpCaches.registered` stays flat over a stream. The
-  * PSI-only report ([[admissionReport]]) scope-caches its reference-side
-  * aggregates the same way, and also each batch's (sources × bins)
-  * counts. Call `graft.ops.OpCaches.releaseAll()`
-  * once, after the stream stops: releasing per batch would re-scan the
-  * reference every batch.
+  * `graft.ops.OpCaches.registered` stays flat over a stream. Call
+  * `graft.ops.OpCaches.releaseAll()` once, after the stream stops:
+  * releasing per batch would re-scan the reference every batch.
   */
 object StreamAdmission {
-
-  /** |sources|-bounded verdict frame for ONE micro-batch: per source, the
-    * batch's row count, the Wilson 95% lower bound of the `quality` share,
-    * the PSI drift of `valueCol` vs the reference snapshot, and the
-    * admission verdict (wilson_lo ≥ minWilsonLo ∧ psi ≤ maxPsi). Sources
-    * present in the reference but absent from the batch yield no row
-    * (nothing to admit); sources present only in the batch get
-    * maximal-drift PSI against the smoothed empty reference — absence of
-    * reference evidence reads as drift, never as a free pass.
-    */
-  def admissionReport(batch: DataFrame, reference: DataFrame,
-                      groupCol: String, valueCol: String, quality: Column,
-                      minWilsonLo: Double, maxPsi: Double,
-                      bins: Int = 10): DataFrame = {
-    val wil = DataQuality.wilsonShare(batch, groupCol, quality)
-      .select(col(groupCol), col("n"), col("wilson_lo"))
-    val drift = Stats.psiByGroup(reference, batch, valueCol, groupCol, bins)
-    wil.join(drift, Seq(groupCol))
-      .select(col(groupCol), col("n"), col("wilson_lo"), col("psi"),
-        (col("wilson_lo") >= minWilsonLo && col("psi") <= maxPsi)
-          .as("admitted"))
-  }
 
   /** The FOUR-ARM admission datacard per micro-batch — the streaming
     * face of [[DataQuality.driftDatacard]] (L300): per source, the batch
@@ -94,11 +69,11 @@ object StreamAdmission {
   }
 
   /** The micro-batch filtered to rows of the sources a verdict frame
-    * admits — `report` is an [[admissionReport]] / [[admissionDatacard]]
-    * output (a `groupCol` and a non-null boolean `admitted` per source).
-    * A broadcast left-semi join on the |sources|-bounded verdict frame:
-    * per-batch cost is the report's own passes plus one over the batch,
-    * with no per-document state.
+    * admits — `report` is an [[admissionDatacard]] output (a `groupCol`
+    * and a non-null boolean `admitted` per source). A broadcast left-semi
+    * join on the |sources|-bounded verdict frame: per-batch cost is the
+    * report's own passes plus one over the batch, with no per-document
+    * state.
     */
   def admit(batch: DataFrame, report: DataFrame,
             groupCol: String): DataFrame =

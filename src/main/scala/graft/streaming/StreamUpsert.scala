@@ -19,7 +19,9 @@ import graft.ops.Changelog
   * (the spec pins this), because latest-wins is associative over ordered
   * splits: fold(fold(S, b1), b2) = fold(S, b1 ++ b2). Out-of-order
   * WITHIN a batch is fine — the per-batch compaction sorts by
-  * (seq, tie) before applying.
+  * (seq, tie) before applying. A stale change that arrives in a LATER
+  * batch than a newer change of its key breaks the contract: no per-key
+  * state remembers the winning (seq, tie) across batches.
   *
   * Scale: the store re-reads per batch (stream-static semantics); state
   * is one row per live key — the minimum any upsert materialization
@@ -37,47 +39,4 @@ object StreamUpsert {
     Changelog.cdcApply(store.select(col(keyCol), col(valCol)), batch,
         keyCol, seqCol, tieCol, opCol, valCol)
       .select(col(keyCol), col(valCol))
-
-  final case class Change(key: Long, seqUs: Long, tie: Long, op: String,
-                          value: Double)
-  final case class KeyState(seqUs: Long, tie: Long, deleted: Boolean,
-                            value: Double)
-  final case class Materialized(key: Long, seqUs: Long, tie: Long,
-                                deleted: Boolean, value: Option[Double])
-
-  /** True STATEFUL latest-value materialization via `mapGroupsWithState`
-    * — one O(1) state row per key holding the winning (seq, tie). Unlike
-    * [[upsertIngest]] (which relies on the contiguous-ordered-split
-    * contract), this tolerates out-of-order arrival ACROSS batches: a
-    * stale change loses against the stored sequence no matter which
-    * micro-batch carries it, so the final materialization equals the
-    * batch [[graft.ops.Changelog.cdcApply]] under ANY permutation of the
-    * change stream (the spec pins this). Emit with
-    * `outputMode("update")`; the latest emission per key IS the store.
-    */
-  /** The per-key state transition: the stored winner survives unless the
-    * incoming change carries a strictly later (seq, tie). Exposed so the
-    * permutation-invariance property can fold it directly.
-    */
-  private[graft] def winner(prev: Option[KeyState], c: Change): KeyState =
-    prev match {
-      case Some(p) if p.seqUs > c.seqUs ||
-        (p.seqUs == c.seqUs && p.tie >= c.tie) => p
-      case _ => KeyState(c.seqUs, c.tie, c.op == "D", c.value)
-    }
-
-  def latestValues(changes: org.apache.spark.sql.Dataset[Change])(
-      implicit outEnc: org.apache.spark.sql.Encoder[Materialized],
-      stEnc: org.apache.spark.sql.Encoder[KeyState])
-      : org.apache.spark.sql.Dataset[Materialized] =
-    changes.groupByKey(_.key)(org.apache.spark.sql.Encoders.scalaLong)
-      .mapGroupsWithState[KeyState, Materialized] {
-        (key: Long, batch: Iterator[Change],
-         state: org.apache.spark.sql.streaming.GroupState[KeyState]) =>
-          val next = batch.foldLeft(state.getOption) {
-            (st, c) => Some(winner(st, c)) }.get
-          state.update(next)
-          Materialized(key, next.seqUs, next.tie, next.deleted,
-            if (next.deleted) None else Some(next.value))
-      }
 }

@@ -8,10 +8,12 @@ import graft.{GraftSession, SparkEntry}
 /** Empirical profiler (guide §1.1 with spark.ui.enabled=false): run one
   * query warm, then measured, and print per-stage wall/task-time/shuffle
   * bytes sorted by duration — the "which stage is slow" answer the Spark
-  * UI would give. The TOTAL line also counts the generated classes the
-  * measured run compiled and their compile time: a warm run should
-  * compile none, so a non-zero count says the query paid for codegen
-  * again.
+  * UI would give. Each run writes every column of the result to Spark's
+  * `noop` sink, as `Verify` writes every column: a `count()` would prune
+  * columns and profile other stages than the ones that run. The TOTAL
+  * line also counts the generated classes the measured run compiled and
+  * their compile time: a warm run should compile none, so a non-zero
+  * count says the query paid for codegen again.
   *
   * `runMain graft.tools.StageProfile <query> [sfDir] [cpus]`
   */
@@ -26,7 +28,8 @@ object StageProfile {
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(q)
 
-    def once(): Unit = { fn(spark, dir).count(); () }
+    def once(): Unit =
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
     once() // warm: codegen + JIT + footers
     graft.ops.OpCaches.releaseAll(blocking = true)
     spark.catalog.clearCache()

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Bridge into `private[sql]` Column↔Expression conversion (Spark 4 moved
   * the classic `new Column(expr)` constructor behind
@@ -37,16 +38,41 @@ object CatalystBridge {
     * (plan-shape guards must not depend on suite execution order).
     */
   def realScanCounts(df: DataFrame): (Int, Int) = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val nodes = realNodes(df, intoCaches = false)
+    (nodes.count(_.isInstanceOf[FileSourceScanExec]),
+      nodes.count(_.isInstanceOf[InMemoryTableScanExec]))
+  }
+
+  /** Count the unkeyed joins that run for an executed plan: (cartesian
+    * products, broadcast nested-loop joins). The [[realScanCounts]] walk,
+    * which also enters each in-memory cached plan ONCE: a cached subtree's
+    * joins run once at materialization, however many scans read it (the
+    * plan string prints a cached plan at every scan site, and twice once
+    * materialized).
+    */
+  def realNestedJoinCounts(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
+      CartesianProductExec}
+    val nodes = realNodes(df, intoCaches = true)
+    (nodes.count(_.isInstanceOf[CartesianProductExec]),
+      nodes.count(_.isInstanceOf[BroadcastNestedLoopJoinExec]))
+  }
+
+  private def realNodes(df: DataFrame, intoCaches: Boolean): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    def walk(p: SparkPlan): (Int, Int) = p match {
+    val entered = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.inputPlan)
-      case _: FileSourceScanExec => (1, 0)
-      case _: InMemoryTableScanExec => (0, 1)
-      case other =>
-        (other.children ++ other.subqueries).map(walk)
-          .foldLeft((0, 0)) { case ((a, b), (c, d)) => (a + c, b + d) }
+      case s: FileSourceScanExec => Seq(s)
+      case m: InMemoryTableScanExec
+          if intoCaches && entered.add(m.relation.cacheBuilder.cachedPlan) =>
+        m +: walk(m.relation.cacheBuilder.cachedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(walk)
     }
     walk(df.queryExecution.executedPlan)
   }

@@ -62,19 +62,6 @@ class ClassifySpec extends AnyFunSuite {
     assert(out.count() === 0)
   }
 
-  test("model save/load round-trips: loaded predictions equal fresh-fit ones") {
-    val m = Classify.naiveBayesFit(corpus, "lang", "text", dim = 32)
-    val dir = java.nio.file.Files.createTempDirectory("nb_model").toString + "/m"
-    Classify.nbSave(m, dir)
-    val loaded = Classify.nbLoad(spark, dir)
-    assert(loaded.columns.toSeq === m.columns.toSeq)
-    def preds(model: org.apache.spark.sql.DataFrame) =
-      Classify.naiveBayesPredict(corpus, model, "doc_id", "text", dim = 32)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-        .sortBy(_._1).toSeq
-    assert(preds(loaded) === preds(m))
-  }
-
   test("argmax tie-break is deterministic (label ascending)") {
     // Perfectly symmetric corpus: one doc per class, same token counts,
     // disjoint vocab; a probe with one token from EACH class ties exactly.

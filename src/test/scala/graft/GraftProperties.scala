@@ -452,29 +452,6 @@ object GraftProperties extends Properties("graft") {
       }
     }
 
-  property("stateful latest-value: ANY batch permutation equals the batch apply (L209)") =
-    forAll(Gen.listOfN(16, genChange), Gen.choose(1L, 999L)) { (raw, seed) =>
-      raw.nonEmpty ==> {
-        val changes = raw.zipWithIndex.map { case ((k, s, _, o, v), i) =>
-          (k, s, i.toLong, o, v) }
-        val expect = refApply(Map.empty, changes)
-        // Deterministic pseudo-shuffle from the generated seed.
-        val shuffled = changes.sortBy { c =>
-          (c._1 * 2654435761L + c._3 * seed) % 1000003L }
-        // Fold the op's OWN state transition over the permuted arrival
-        // order — exactly what mapGroupsWithState executes per batch.
-        import graft.streaming.StreamUpsert
-        val adv = shuffled.foldLeft(Map.empty[Long, StreamUpsert.KeyState]) {
-          case (st, (k, s, t, o, v)) =>
-            st.updated(k, StreamUpsert.winner(st.get(k),
-              StreamUpsert.Change(k, s, t, o, v)))
-        }
-        val live = adv.collect {
-          case (k, st) if !st.deleted => k -> st.value }
-        Prop(live == expect) :| s"live=$live expect=$expect"
-      }
-    }
-
   property("spearman rho is invariant under strictly monotone transforms (L269)") =
     forAll(Gen.listOfN(24, Gen.zip(Gen.choose(-50, 50), Gen.choose(-50, 50))),
       Gen.choose(1, 9)) { (pts, a) =>

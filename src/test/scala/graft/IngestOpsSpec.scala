@@ -184,7 +184,7 @@ class IngestOpsSpec extends AnyFunSuite {
     import graft.ops.Erasure
     val t = Seq((1L, "a"), (2L, "b"), (3L, "c"), (2L, "d")).toDF("uid", "v")
     val ids = Seq(2L, 9L).toDF("id") // 9 matches nothing — must be harmless
-    val purged = Erasure.forget(t, "uid", ids, "id")
+    val purged = t.join(ids.select(col("id").as("uid")), Seq("uid"), "left_anti")
     assert(purged.as[(Long, String)].collect().toSet ==
       Set((1L, "a"), (3L, "c")))
     assert(purged.join(ids, purged("uid") === ids("id"), "left_semi").count() == 0,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graft.CatalystBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guard: the scale properties argued in SCALE.md are
@@ -773,13 +774,60 @@ class PlanShapeSpec extends AnyFunSuite {
     // (scans: main spine, LM tokens, and the dedup machinery's passes).
     val scans = opt.collect {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-        if r.toString.contains("documents") => r
+        if readsDocuments(r) => r
     }.size
     assert(scans <= docScansV2Expected,
       s"unexpected extra documents scan (quality join regressed?): $scans\n${p.take(1500)}")
   }
   // Measured for the inlined-quality shape; the joined shape adds 1.
   private val docScansV2Expected = 4
+
+  // A relation's plan string names its columns, not its files: match the
+  // documents table by the file the relation reads.
+  private def readsDocuments(
+      r: org.apache.spark.sql.execution.datasources.LogicalRelation): Boolean =
+    r.relation match {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        h.location.rootPaths.exists(_.getName == "documents.parquet")
+      case _ => false
+    }
+
+  test("curation rule gate is a filter: no flag-frame join re-reads documents") {
+    // The rule gate (TextAnalysis.rulePassCol) filters the scan row; the
+    // old shape built the ruleFlags frame from a second documents read
+    // and joined it back on doc_id. These pipelines scope-cache their
+    // survivors, so the count enters each cached frame's plan once.
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def documentsRelations(p: LogicalPlan): Int = {
+      val entered = scala.collection.mutable.Set.empty[LogicalPlan]
+      def walk(n: LogicalPlan): Int = n match {
+        case r: LogicalRelation => if (readsDocuments(r)) 1 else 0
+        case m: InMemoryRelation =>
+          if (entered.add(m.cacheBuilder.logicalPlan))
+            walk(m.cacheBuilder.logicalPlan)
+          else 0
+        case other => other.children.map(walk).sum
+      }
+      walk(p)
+    }
+    for ((q, expected) <- docRelationsRuleGated) {
+      val opt = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
+      val n = documentsRelations(opt)
+      assert(n <= expected,
+        s"$q has $n documents relations (measured $expected): a rule-flag " +
+          s"join back?\n${opt.toString.take(1500)}")
+    }
+    graft.ops.OpCaches.releaseAll()
+  }
+  // Measured with the rule gate as a filter. Joining the flag frame back
+  // adds 1 to each, and 16 to v8, whose gated frame feeds the pair
+  // mining's cached frames and the cached sample.
+  private val docRelationsRuleGated = Seq(
+    "curation_pipeline_v3" -> 17, "curation_pipeline_v5" -> 1,
+    "curation_pipeline_v6" -> 6, "curation_pipeline_v7" -> 4,
+    "curation_pipeline_v8" -> 16)
 
   test("curation v4 cleans and routes in ONE projection: no self-join before the cache") {
     // Scrub + script routing are both projections; everything upstream
@@ -889,22 +937,20 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!ks.contains("BroadcastNestedLoopJoin"),
       s"ksByGroup has no unkeyed join:\n${ks.take(1200)}")
     // psiByGroup consumers: the only nest-loops allowed are the 1-row
-    // edge broadcasts (one per side) and the groups x bins grid spine —
-    // all structurally bounded AND each materialized ONCE behind an
+    // edge broadcasts, one per side, each materialized ONCE behind an
     // OpCaches scope (uncached, Spark duplicated the subtrees and the
     // corpus was scanned ~4x per side — this guard's first run caught
-    // it). The plan DUMP inlines every cached build plan at each scan
-    // site, so the string count of nest-loops exceeds the runtime count;
-    // assert the caches are actually in the plan, and bound the dump
-    // count loosely as a drift tripwire.
+    // it). Counted by traversal, each cached plan once: the plan dump
+    // inlines every cached build plan at each scan site.
     for (q <- Seq("corpus_admission_report", "curation_pipeline_v6")) {
-      val p = plan(q)
-      assert(!p.contains("CartesianProduct"), s"$q:\n${p.take(800)}")
+      val df = SparkEntry.queries(q)(spark, dir)
+      val p = df.queryExecution.executedPlan.toString
+      val (cart, bnlj) = CatalystBridge.realNestedJoinCounts(df)
+      assert(cart == 0, s"$q:\n${p.take(800)}")
       assert(p.contains("InMemoryTableScan"),
         s"$q: psiByGroup's bounded frames must be scope-cached:\n${p.take(1200)}")
-      val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
-      assert(bnlj <= 12,
-        s"$q: only bounded cached spines may nest-loop ($bnlj):\n${p.take(1500)}")
+      assert(bnlj <= 2,
+        s"$q: only the cached edge spines may nest-loop ($bnlj, measured 2):\n${p.take(1500)}")
       assert(p.contains("BroadcastHashJoin"),
         s"$q: admission frames must broadcast-hash-join back:\n${p.take(1200)}")
     }
@@ -922,9 +968,9 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!lp.contains("BroadcastNestedLoopJoin"), lp.take(1200))
     // v7: KS admission is windows + equi-joins; the only broadcasts are
     // the |sources|-bounded admission frames joining back.
-    val v7 = plan("curation_pipeline_v7")
-    assert(!v7.contains("CartesianProduct"), v7.take(800))
-    assert(!v7.contains("BroadcastNestedLoopJoin"), v7.take(1200))
+    val v7Df = SparkEntry.queries("curation_pipeline_v7")(spark, dir)
+    val v7 = v7Df.queryExecution.executedPlan.toString
+    assert(CatalystBridge.realNestedJoinCounts(v7Df) == ((0, 0)), v7.take(1200))
     assert(v7.contains("BroadcastHashJoin"), v7.take(1200))
     // JS drift: one full-outer equi-join + per-group windows, like KS.
     val js = plan("dq_js_by_source")
@@ -954,9 +1000,9 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!pq.contains("CartesianProduct"), pq.take(800))
     // Curation v8: pair mining, sample restriction, split, and audit are
     // all equi-keyed; admission frames broadcast back.
-    val v8 = plan("curation_pipeline_v8")
-    assert(!v8.contains("CartesianProduct"), v8.take(800))
-    assert(!v8.contains("BroadcastNestedLoopJoin"), v8.take(1200))
+    val v8Df = SparkEntry.queries("curation_pipeline_v8")(spark, dir)
+    assert(CatalystBridge.realNestedJoinCounts(v8Df) == ((0, 0)),
+      v8Df.queryExecution.executedPlan.toString.take(1200))
   }
 
   test("round-14 unified drift datacard: shared cached scans, bounded spines") {
@@ -1019,20 +1065,19 @@ class PlanShapeSpec extends AnyFunSuite {
         s"fileScans=$ndFileScans (measured 0, cacheScans=$ndCacheScans)")
 
     // Admission curations: v6 (Wilson + binned-PSI arms; psiByGroup's
-    // bounded spines are the only nest-loops) and v7 (KS arm — fully
-    // equi-keyed). Scan ceilings are REAL (traversal) counts — see the
+    // cached edge spines are the only nest-loops) and v7 (KS arm — fully
+    // equi-keyed). Every count is a REAL (traversal) count — see the
     // nearDuplicates guard above for why string counts are order-fragile.
     def realCounts(q: String): (Int, Int, Int, Int) = {
       val df = SparkEntry.queries(q)(spark, dir)
-      val (f, m) = org.apache.spark.sql.graft.CatalystBridge.realScanCounts(df)
-      val s = df.queryExecution.executedPlan.toString
-      ("CartesianProduct".r.findAllIn(s).size,
-        "BroadcastNestedLoopJoin".r.findAllIn(s).size, f, m)
+      val (f, m) = CatalystBridge.realScanCounts(df)
+      val (cart, bnlj) = CatalystBridge.realNestedJoinCounts(df)
+      (cart, bnlj, f, m)
     }
     val (v6Cart, v6Bnlj, v6Scans, _) = realCounts("curation_pipeline_v6")
     assert(v6Cart == 0, "v6 cartesian")
-    assert(v6Bnlj <= 10 && v6Scans <= 3,
-      s"v6 grew: bnlj=$v6Bnlj (measured 10) scans=$v6Scans (measured 3)")
+    assert(v6Bnlj <= 2 && v6Scans <= 3,
+      s"v6 grew: bnlj=$v6Bnlj (measured 2) scans=$v6Scans (measured 3)")
     val (v7Cart, v7Bnlj, v7Scans, _) = realCounts("curation_pipeline_v7")
     assert(v7Cart == 0 && v7Bnlj == 0,
       s"v7 must stay equi-keyed: cart=$v7Cart bnlj=$v7Bnlj")
@@ -1045,7 +1090,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // every corpus pass reads a scoped cache.
     val (eCart, eBnlj, eScans, eImr) = realCounts("e2e_incremental_session")
     assert(eCart == 0, "e2e cartesian")
-    assert(eBnlj <= 10, s"e2e: only psi spines may nest-loop ($eBnlj)")
+    assert(eBnlj <= 2, s"e2e: only psi spines may nest-loop ($eBnlj, measured 2)")
     assert(eImr >= 1, "e2e: the fresh batch must be scope-cached")
     assert(eScans == 0, s"e2e grew: scans=$eScans (measured 0)")
     graft.ops.OpCaches.releaseAll()

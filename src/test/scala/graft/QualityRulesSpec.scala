@@ -159,22 +159,4 @@ class QualityRulesSpec extends AnyFunSuite {
     assert(w(10L) > w(11L),
       s"target-vocabulary doc must out-weigh the unrelated one: $w")
   }
-
-  test("bpeLearn learns the corpus's most frequent pairs; applying them compresses") {
-    val d = Seq(
-      (1L, "the then there"),
-      (2L, "the other thread"),
-      (3L, "that the theme")
-    ).toDF("doc_id", "text")
-    val merges = TextAnalysis.bpeLearn(d, "text", nMerges = 2)
-    // 't h' is the most frequent adjacent pair (every word starts 'th'
-    // except 'other', which still contains it); 'th e' follows.
-    assert(merges.head == ("t", "h"), s"first merge: $merges")
-    assert(merges(1) == ("th", "e"), s"second merge: $merges")
-    val before = TextAnalysis.bpeTokens(d, "doc_id", "text", Seq.empty)
-      .agg(org.apache.spark.sql.functions.sum("n_tokens")).head().getLong(0)
-    val after = TextAnalysis.bpeTokens(d, "doc_id", "text", merges)
-      .agg(org.apache.spark.sql.functions.sum("n_tokens")).head().getLong(0)
-    assert(after < before, s"learned merges must compress: $before -> $after")
-  }
 }

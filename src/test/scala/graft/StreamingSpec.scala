@@ -23,6 +23,7 @@ class StreamingSpec extends AnyFunSuite {
                           quality: Column, minWilsonLo: Double,
                           valueCol: String = "same_v", catCol: String = "same_c",
                           vecCol: String = "same_e",
+                          maxPsi: Double = Double.PositiveInfinity,
                           maxKs: Double = Double.PositiveInfinity,
                           maxJs: Double = Double.PositiveInfinity,
                           minCentroidCos: Double = Double.NegativeInfinity,
@@ -31,7 +32,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("same_c", lit("x")).withColumn("same_e", array(lit(1.0)))
     graft.streaming.StreamAdmission.admissionDatacard(same(batch), same(reference),
       "source", valueCol, catCol, vecCol, quality, minWilsonLo,
-      maxPsi = Double.PositiveInfinity, maxKs = maxKs, maxJs = maxJs,
+      maxPsi = maxPsi, maxKs = maxKs, maxJs = maxJs,
       minCentroidCos = minCentroidCos, maxNormDelta = maxNormDelta)
   }
 
@@ -755,48 +756,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(folded == Map(1L -> 12.0, 2L -> 21.0, 4L -> 44.0, 9L -> 90.0))
   }
 
-  test("stateful latest-value upsert tolerates out-of-order arrival across batches") {
-    import graft.streaming.StreamUpsert.{Change, Materialized}
-    // Changes deliberately arrive out of order ACROSS batches: key 1's
-    // final update lands in batch 1, a stale one in batch 3; key 2's
-    // delete is followed (in arrival order) by an OLDER update that must
-    // lose; key 3 is deleted last.
-    val b1 = Seq(Change(1L, 300L, 1L, "U", 13.0), Change(2L, 100L, 1L, "U", 21.0))
-    val b2 = Seq(Change(2L, 400L, 2L, "D", 0.0), Change(3L, 100L, 3L, "U", 31.0))
-    val b3 = Seq(Change(1L, 200L, 4L, "U", 12.0), // stale: loses to 300
-      Change(2L, 300L, 5L, "U", 22.0),            // stale: loses to the delete
-      Change(3L, 200L, 6L, "D", 0.0))
-    val input = MemoryStream[Change](
-      implicitly[org.apache.spark.sql.Encoder[Change]], spark)
-    val q = graft.streaming.StreamUpsert.latestValues(input.toDS())(
-        implicitly, implicitly)
-      .writeStream.outputMode("update").format("memory")
-      .queryName("latest_values").start()
-    try {
-      Seq(b1, b2, b3).foreach { b => input.addData(b); q.processAllAvailable() }
-      val got = spark.table("latest_values")
-        .groupBy("key").agg(max(struct(col("seqUs"), col("tie"),
-          col("deleted"), col("value"))).as("s"))
-        .select(col("key"), col("s.deleted"), col("s.value"))
-        .as[(Long, Boolean, Option[Double])].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got == Map(
-        1L -> ((false, Some(13.0))),
-        2L -> ((true, None)),
-        3L -> ((true, None))), got.toString)
-      // Batch equivalence: cdcApply over an empty snapshot + ALL changes
-      // keeps exactly the undeleted keys with the same values.
-      val all = (b1 ++ b2 ++ b3).map(c => (c.key, c.seqUs, c.tie, c.op, c.value))
-        .toDF("k", "seq", "tie", "op", "v")
-      val batch = graft.ops.Changelog.cdcApply(
-          Seq.empty[(Long, Double)].toDF("k", "v"), all,
-          "k", "seq", "tie", "op", "v")
-        .select("k", "v").as[(Long, Double)].collect().toMap
-      val live = got.collect { case (k, (false, Some(v))) => k -> v }
-      assert(live == batch, s"$live vs $batch")
-    } finally q.stop()
-  }
-
   test("native session_window aggregation equals the batch sessionizer") {
     def t(min: Long) = new java.sql.Timestamp(min * 60000L)
     // user 1: two sessions split by a 45-min gap; user 2: one session.
@@ -963,10 +922,10 @@ class StreamingSpec extends AnyFunSuite {
     val rows = Seq(("s1", 1.2, true), ("s1", 3.1, true), ("s1", 2.2, false),
       ("s2", 1.6, true), ("s2", 3.4, false))
     def report(rs: Seq[(String, Double, Boolean)]) =
-      graft.streaming.StreamAdmission.admissionReport(
-          rs.toDF("source", "value", "ok"), reference, "source", "value",
-          col("ok"), minWilsonLo = 0.1, maxPsi = 5.0)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+      datacardArm(rs.toDF("source", "value", "ok"), reference, col("ok"),
+          minWilsonLo = 0.1, valueCol = "value", maxPsi = 5.0)
+        .select("source", "n", "wilson_lo", "psi", "admitted").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
           r.getDouble(3), r.getBoolean(4))).toSet
     val fwd = report(rows)
     assert(fwd == report(rows.reverse) &&
@@ -991,9 +950,8 @@ class StreamingSpec extends AnyFunSuite {
         if (ids.nonEmpty) {
           // Admission runs on the deduped batch; the report stays
           // |sources|-bounded regardless of disorder.
-          val rep = graft.streaming.StreamAdmission.admissionReport(
-            b, reference, "source", "value", col("value") > 0.0,
-            minWilsonLo = 0.1, maxPsi = 5.0)
+          val rep = datacardArm(b, reference, col("value") > 0.0,
+            minWilsonLo = 0.1, valueCol = "value", maxPsi = 5.0)
           assert(rep.count() <= 2)
           seen.synchronized { seen += ids }
           graft.ops.OpCaches.releaseAll()
@@ -1110,8 +1068,8 @@ class StreamingSpec extends AnyFunSuite {
 
     def admitBatch(df: org.apache.spark.sql.DataFrame) =
       graft.streaming.StreamAdmission.admit(df,
-        graft.streaming.StreamAdmission.admissionReport(df, reference, "source",
-          "n_chars", col("n_chars") > 50, minWilsonLo = 0.5, maxPsi = 1.0),
+        datacardArm(df, reference, col("n_chars") > 50, minWilsonLo = 0.5,
+          valueCol = "n_chars", maxPsi = 1.0),
         "source")
 
     val input = MemoryStream[(String, String, Long, String)](

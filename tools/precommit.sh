@@ -30,9 +30,16 @@ grep -q "ENTRY_SMOKE_OK" /tmp/precommit_smoke.log || {
 if [ "${GRAFT_PRECOMMIT_NOSPEC:-0}" != "1" ]; then
   # Union in untracked files: a brand-new main-source class must also get
   # its referencing specs run, not just modified tracked ones.
-  CHANGED=$({ git diff --name-only HEAD -- 'src/main/scala';
+  CHANGED_FILES=$({ git diff --name-only HEAD -- 'src/main/scala';
       git ls-files --others --exclude-standard -- 'src/main/scala'; } |
-    grep '\.scala$' | xargs -r -n1 basename | sed 's/\.scala$//' | sort -u)
+    grep '\.scala$' || true)
+  CHANGED=$(echo "$CHANGED_FILES" | xargs -r -n1 basename |
+    sed 's/\.scala$//' | sort -u)
+  # Suites such as PlanShapeSpec reach query bodies only by name, through
+  # SparkEntry.queries: a change to a query file selects them too.
+  if echo "$CHANGED_FILES" | grep -q '^src/main/scala/graft/queries/'; then
+    CHANGED="$CHANGED SparkEntry"
+  fi
   # Suites are named from their `class`/`object` declarations, not from
   # file names: a file may be named by subject while its class keeps an
   # older name (StatisticsOpsSpec.scala holds Round11OpsSpec).
