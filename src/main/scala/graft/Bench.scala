@@ -331,10 +331,12 @@ object Bench {
           maxReportRows = math.max(maxReportRows, rep.count())
           rows += b.count()
           // The REFERENCE is pinned across batches: its drift profile is
-          // the only scoped cache, so batch 2+ reads it from cache (the
-          // production pattern for a stream-static reference), and it is
-          // released once after the stream stops. Releasing per batch
-          // would re-scan the reference every batch and time the cache
+          // the only scoped cache, so batch 2+ reads it from cache and
+          // runs the datacard plan kept from batch 1 over its own rows,
+          // with no job before the action (the production pattern for a
+          // stream-static reference). Both are released once after the
+          // stream stops. Releasing per batch would re-scan the reference
+          // and rebuild the datacard every batch, and time the cache
           // churn, not the op.
           ()
         }

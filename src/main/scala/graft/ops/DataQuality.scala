@@ -330,18 +330,26 @@ object DataQuality {
   def driftDatacard(ref: DataFrame, cur: DataFrame, groupCol: String,
                     valueCol: String, catCol: String, vecCol: String,
                     bins: Int = 10): DataFrame =
-    driftCard(ref, cur, groupCol, valueCol, catCol, vecCol, bins, lit(false))
+    driftCard(referenceProfile(ref, groupCol, valueCol, catCol, vecCol), cur,
+      groupCol, valueCol, catCol, vecCol, bins, lit(false))
       .drop("n", "successes")
 
-  /** [[driftDatacard]] plus the current side's row count `n` and its
-    * `success` count `successes` (null for a group absent from `cur`) —
-    * the admission datacard's Wilson inputs, from the same scan. */
-  private[graft] def driftCard(ref: DataFrame, cur: DataFrame, groupCol: String,
+  /** The reference side of [[driftCard]]: `ref`'s [[driftProfile]],
+    * scope-cached (the only scoped cache of the datacard). */
+  private[graft] def referenceProfile(ref: DataFrame, groupCol: String,
+                                      valueCol: String, catCol: String,
+                                      vecCol: String): DataFrame =
+    OpCaches.scoped(driftProfile(ref, groupCol, valueCol, catCol, vecCol,
+      lit(false), "ref"))
+
+  /** [[driftDatacard]] over a [[referenceProfile]] `r`, plus the current
+    * side's row count `n` and its `success` count `successes` (null for a
+    * group absent from `cur`) — the admission datacard's Wilson inputs,
+    * from the same scan. */
+  private[graft] def driftCard(r: DataFrame, cur: DataFrame, groupCol: String,
                                valueCol: String, catCol: String, vecCol: String,
                                bins: Int, success: Column): DataFrame = {
     require(bins > 0, "bins must be positive")
-    val r = OpCaches.scoped(driftProfile(ref, groupCol, valueCol, catCol,
-      vecCol, lit(false), "ref"))
     // Fixed-width PSI edges over every non-null reference value (null
     // groups included): the per-group extremes are collected (|groups|
     // rows) and folded into two doubles, applied as literals to both

@@ -88,21 +88,37 @@ object TextAnalysis {
 
   def langId(docs: DataFrame, idCol: String, textCol: String,
              markers: Seq[(String, Seq[String])] = DefaultMarkers): DataFrame = {
-    val ws = words(col(textCol))
-    val scored = markers.foldLeft(docs.select(col(idCol), ws.as("__ws"))) {
-      case (df, (lang, mks)) =>
-        df.withColumn(s"score_$lang",
-          size(filter(col("__ws"), w => w.isin(mks: _*))).cast("long"))
-    }
     val langs = markers.map(_._1)
-    val best = langs.map(l => col(s"score_$l")).reduce((a, b) => greatest(a, b))
-    // First language (in priority order) achieving the max score; 'und' when
-    // no marker hit at all.
-    val predicted = langs.foldRight(lit("und")) { (l, rest) =>
-      when(col(s"score_$l") === best && best > 0, lit(l)).otherwise(rest)
+    val scores = langs.map(l => col(s"score_$l"))
+    docs.select(col(idCol), words(col(textCol)).as("__ws"))
+      .select(col(idCol) +: langScores(col("__ws"), markers).zip(langs).map {
+        case (c, l) => c.as(s"score_$l") }: _*)
+      .select(col(idCol) +: scores :+
+        predictedLang(scores, langs).as("predicted_lang"): _*)
+  }
+
+  /** [[langId]]'s `predicted_lang` as one column over the text — for
+    * composites that only filter on the language: the row already holds
+    * the text, where joining the langId frame back on the id re-read the
+    * corpus and shuffled it for one value per row.
+    */
+  def langIdCol(t: Column,
+                markers: Seq[(String, Seq[String])] = DefaultMarkers): Column =
+    predictedLang(langScores(words(t), markers), markers.map(_._1))
+
+  /** Per language, in `markers` order, the count of its marker words. */
+  private def langScores(ws: Column,
+                         markers: Seq[(String, Seq[String])]): Seq[Column] =
+    markers.map { case (_, mks) =>
+      size(filter(ws, w => w.isin(mks: _*))).cast("long") }
+
+  /** The first language (in priority order) achieving the max score;
+    * 'und' when no marker hit at all. */
+  private def predictedLang(scores: Seq[Column], langs: Seq[String]): Column = {
+    val best = scores.reduce((a, b) => greatest(a, b))
+    scores.zip(langs).foldRight(lit("und")) { case ((s, l), rest) =>
+      when(s === best && best > 0, lit(l)).otherwise(rest)
     }
-    scored.withColumn("predicted_lang", predicted)
-      .select(col(idCol) +: langs.map(l => col(s"score_$l")) :+ col("predicted_lang"): _*)
   }
 
   /** Corpus-level top-k n-grams (frequency profile — the standard first

@@ -649,12 +649,10 @@ object TextQueries {
     // Catalyst seeing all of it at once.
     "curation_pipeline_e2e" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
-      val lang = TextAnalysis.langId(docs, "doc_id", "text")
-        .select(col("doc_id"), col("predicted_lang"))
       docs
         .withColumn("quality_score", TextAnalysis.qualityScoreCol(col("text")))
-        .join(lang, Seq("doc_id"))
-        .filter(col("quality_score") >= 0.5 && col("predicted_lang") === "en")
+        .filter(col("quality_score") >= 0.5 &&
+          TextAnalysis.langIdCol(col("text")) === "en")
         .transform(dropDupVictims(docs))
         .transform(d => Sampling.bernoulli(d, "doc_id", 0.9))
         .select(col("doc_id"), col("source"),

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.sql.graft.CatalystBridge.PlanTemplate
 
 /** Incremental maintenance of the QueryEngine KPI bundle over a stream
   * (SURVEY.md §2.10 + §3.1 lifecycle).
@@ -9,10 +11,11 @@ import org.apache.spark.sql.functions._
   * The reference appends every tick's rows client-side and reruns the full
   * batch KPI pipeline over ALL accumulated data (`viz.py:742-803`). Here
   * each micro-batch contributes ONE distributed aggregation over only its
-  * own rows; the per-cohort moments (n, Σv, min, max, Σv²) merge
-  * associatively into running state, so per-tick work is O(batch) — not
-  * O(stream) — and the emitted KPI row is algebraically identical to the
-  * batch engine's ([[graft.query.QueryEngine.run]] `kpis` schema).
+  * own rows, both cohorts together; the per-cohort moments (n, Σv, min,
+  * max, Σv²) merge associatively into running state, so per-tick work is
+  * O(batch) — not O(stream) — and the emitted KPI row is algebraically
+  * identical to the batch engine's ([[graft.query.QueryEngine.run]]
+  * `kpis` schema).
   *
   * Restart note: state lives on the driver. A production restart rebuilds
   * it by replaying the per-batch moment rows from the checkpointed sink
@@ -49,25 +52,45 @@ final class BundleKpiSink(subjectPred: Column, controlPred: Column,
   private val emitted =
     scala.collection.mutable.ArrayBuffer.empty[(Long, (Acc, Acc))]
 
-  private def accOf(df: DataFrame): Acc = {
-    val v = col(valueCol)
-    // count(v), not count(*): a batch whose rows all carry a NULL value
-    // has count(*) > 0 but null sum/min/max — it must merge as empty, or
-    // the getDouble calls would NPE and kill the streaming query.
-    val r = df.agg(count(v), sum(v), min(v), max(v), sum(v * v)).head()
-    if (r.getLong(0) == 0L) Acc.empty
-    else Acc(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
-      r.getDouble(4))
-  }
+  /** The first batch's aggregation, kept to run over later batches. */
+  @transient private var kept: PlanTemplate = _
 
-  /** foreachBatch hook: one distributed aggregation per cohort over THIS
-    * batch only, merged into the running moments.
+  /** foreachBatch hook: ONE distributed aggregation over THIS batch only,
+    * merged into the running moments. Each cohort's value is projected
+    * once, as `when(pred, value)` (null outside the cohort), and all ten
+    * moments aggregate over the two projected columns: each cohort sees
+    * the rows its filter kept, summed per partition in the same order,
+    * and each predicate (a long `isin`, say) is evaluated once per row.
+    * The aggregation is built for the first batch only: a later batch of
+    * the same schema and session runs its analyzed plan
+    * (`CatalystBridge.template`), so the predicates are not analyzed
+    * again per batch.
     */
   def step(batch: DataFrame, batchId: Long): Unit = synchronized {
-    subj = subj.merge(accOf(batch.filter(subjectPred)))
-    ctrl = ctrl.merge(accOf(batch.filter(controlPred)))
+    val r = Option(kept).flatMap(_.bind(batch)).getOrElse {
+      val v = col(valueCol)
+      val ms = moments(col("__subj")) ++ moments(col("__ctrl"))
+      val agg = batch.select(when(subjectPred, v).as("__subj"),
+          when(controlPred, v).as("__ctrl"))
+        .agg(ms.head, ms.tail: _*)
+      kept = CatalystBridge.template(agg, batch).orNull
+      agg
+    }.head()
+    subj = subj.merge(accOf(r, 0))
+    ctrl = ctrl.merge(accOf(r, 5))
     emitted += batchId -> (subj, ctrl)
   }
+
+  // count(v), not count(*): a batch whose rows all carry a NULL value
+  // has count(*) > 0 but null sum/min/max — it must merge as empty, or
+  // the getDouble calls would NPE and kill the streaming query.
+  private def moments(v: Column): Seq[Column] =
+    Seq(count(v), sum(v), min(v), max(v), sum(v * v))
+
+  private def accOf(r: org.apache.spark.sql.Row, i: Int): Acc =
+    if (r.getLong(i) == 0L) Acc.empty
+    else Acc(r.getLong(i), r.getDouble(i + 1), r.getDouble(i + 2),
+      r.getDouble(i + 3), r.getDouble(i + 4))
 
   /** Current bundle KPIs as a 1-row frame with the batch engine's exact
     * `kpis` schema.

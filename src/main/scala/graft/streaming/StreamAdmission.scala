@@ -2,6 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.sql.graft.CatalystBridge.PlanTemplate
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.DataQuality
 
@@ -17,14 +20,31 @@ import graft.ops.DataQuality
   * curated corpus's profile — a stream-static join side, pinned by the
   * caller across batches); everything derived here is |sources|-bounded.
   *
-  * Cache contract: [[admissionDatacard]] scope-caches one frame, the
-  * reference's drift profile; a later batch re-deriving the same
-  * reference finds it in the CacheManager and registers nothing, so
-  * `graft.ops.OpCaches.registered` stays flat over a stream. Call
-  * `graft.ops.OpCaches.releaseAll()` once, after the stream stops:
-  * releasing per batch would re-scan the reference every batch.
+  * Cache contract: [[admissionDatacard]] keeps two things per reference
+  * frame. One is the reference's drift profile, scope-cached; a later
+  * batch re-deriving the same reference finds it in the CacheManager and
+  * registers nothing, so `graft.ops.OpCaches.registered` stays flat over
+  * a stream. The other is the analyzed datacard plan of the last fresh
+  * build, its PSI edges already folded in as literals: a later batch of
+  * the same schema, with equal arguments and from the same session, runs
+  * that plan over its own rows instead of building the datacard again.
+  * Both end at `graft.ops.OpCaches.releaseAll()`: the plan is used only
+  * while the profile is cached, so the first batch after a release
+  * builds afresh and caches the profile again. Call it once, after the
+  * stream stops: releasing per batch would re-scan the reference and
+  * rebuild the datacard every batch.
   */
 object StreamAdmission {
+
+  /** The datacard plan of the last fresh build against one reference:
+    * the arguments it was built for, the reference profile it reads, and
+    * the plan over that build's batch. */
+  private final case class Planned(args: Seq[Any], profile: DataFrame,
+                                   plan: PlanTemplate)
+
+  /** Keyed weakly on the reference frame itself: a plan lives no longer
+    * than the reference it was built against. */
+  private val planned = new java.util.WeakHashMap[DataFrame, Planned]()
 
   /** The FOUR-ARM admission datacard per micro-batch — the streaming
     * face of [[DataQuality.driftDatacard]] (L300): per source, the batch
@@ -44,7 +64,9 @@ object StreamAdmission {
     * to ln 2, the vector metrics stay NULL — and the verdict is an
     * explicit false, never NULL. The Wilson counts come from the batch's
     * own drift profile, so one batch is one scan plus one join against
-    * the cached reference profile (see the cache contract above).
+    * the cached reference profile. After the first batch the datacard is
+    * not built again: the kept plan runs over the new batch, which costs
+    * no Spark job before the action (see the cache contract above).
     */
   def admissionDatacard(batch: DataFrame, reference: DataFrame,
                         groupCol: String, valueCol: String, catCol: String,
@@ -52,20 +74,36 @@ object StreamAdmission {
                         minWilsonLo: Double, maxPsi: Double, maxKs: Double,
                         maxJs: Double, minCentroidCos: Double,
                         maxNormDelta: Double, bins: Int = 10): DataFrame = {
-    val (_, wilsonLo, _) = DataQuality.wilsonBounds(col("n"), col("successes"))
-    val ks = coalesce(col("ks"), lit(1.0))
-    val js = when(col("js_n_ref") > 0 && col("js_n_cur") > 0, col("js"))
-      .otherwise(lit(math.log(2.0)))
-    DataQuality.driftCard(reference, batch, groupCol, valueCol, catCol,
-        vecCol, bins, quality)
-      .filter(col("n").isNotNull)
-      .select(col(groupCol), col("n"), wilsonLo.as("wilson_lo"), col("psi"),
-        ks.as("ks"), js.as("js"), col("centroid_cosine"), col("norm_ratio"),
-        coalesce(wilsonLo >= minWilsonLo && col("psi") <= maxPsi &&
-          ks <= maxKs && js <= maxJs &&
-          col("centroid_cosine") >= minCentroidCos &&
-          abs(col("norm_ratio") - 1.0) <= maxNormDelta, lit(false))
-          .as("admitted"))
+    val args = Seq(groupCol, valueCol, catCol, vecCol, quality, minWilsonLo,
+      maxPsi, maxKs, maxJs, minCentroidCos, maxNormDelta, bins)
+    planned.synchronized(Option(planned.get(reference)))
+      .filter(p => p.args == args &&
+        p.profile.storageLevel != StorageLevel.NONE)
+      .flatMap(_.plan.bind(batch))
+      .getOrElse {
+        val profile = DataQuality.referenceProfile(reference, groupCol,
+          valueCol, catCol, vecCol)
+        val (_, wilsonLo, _) = DataQuality.wilsonBounds(col("n"), col("successes"))
+        val ks = coalesce(col("ks"), lit(1.0))
+        val js = when(col("js_n_ref") > 0 && col("js_n_cur") > 0, col("js"))
+          .otherwise(lit(math.log(2.0)))
+        val card = DataQuality.driftCard(profile, batch, groupCol, valueCol,
+            catCol, vecCol, bins, quality)
+          .filter(col("n").isNotNull)
+          .select(col(groupCol), col("n"), wilsonLo.as("wilson_lo"), col("psi"),
+            ks.as("ks"), js.as("js"), col("centroid_cosine"), col("norm_ratio"),
+            coalesce(wilsonLo >= minWilsonLo && col("psi") <= maxPsi &&
+              ks <= maxKs && js <= maxJs &&
+              col("centroid_cosine") >= minCentroidCos &&
+              abs(col("norm_ratio") - 1.0) <= maxNormDelta, lit(false))
+              .as("admitted"))
+        planned.synchronized(CatalystBridge.template(card, batch, reference) match {
+          case Some(t) =>
+            planned.put(reference, Planned(args, profile, t))
+          case None => planned.remove(reference)
+        })
+        card
+      }
   }
 
   /** The micro-batch filtered to rows of the sources a verdict frame

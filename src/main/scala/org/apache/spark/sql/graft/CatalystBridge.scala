@@ -1,19 +1,78 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Bridge into `private[sql]` Column↔Expression conversion (Spark 4 moved
   * the classic `new Column(expr)` constructor behind
-  * `org.apache.spark.sql.classic.ExpressionUtils`). Lives in the
+  * `org.apache.spark.sql.classic.ExpressionUtils`) and into Dataset
+  * construction from a logical plan (`Dataset.ofRows`). Lives in the
   * `org.apache.spark.sql` package space solely to satisfy the access
-  * modifier; keep it to these two forwarders.
+  * modifiers.
   */
 object CatalystBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** An analyzed plan kept to run again over a new input: `plan` reads
+    * `leaf` (the plan of the input it was built over, from
+    * `inputSession`) exactly once. See [[template]].
+    */
+  final class PlanTemplate private[CatalystBridge] (
+      session: SparkSession, plan: LogicalPlan, leaf: LogicalPlan,
+      inputSession: SparkSession) {
+    private val nodes = planNodes(plan)
+
+    /** The template over `input` in place of its leaf, analyzed again but
+      * not rebuilt: the input's plan sits under a projection that aliases
+      * its attributes, by position, to the leaf's expression ids. The
+      * optimizer and the physical planner run per call, as for any new
+      * Dataset. None when the input comes from another session, its
+      * schema (names, types, nullability) differs from the leaf's, or its
+      * plan shares a node with the template.
+      */
+    def bind(input: DataFrame): Option[DataFrame] = {
+      val in = castToImpl(input).logicalPlan
+      if ((input.sparkSession ne inputSession) || input.schema != leaf.schema ||
+          in.exists(nodes.contains)) None
+      else {
+        val aliased = Project(in.output.zip(leaf.output).map { case (n, o) =>
+          if (n.exprId == o.exprId) n else Alias(n, o.name)(exprId = o.exprId)
+        }, in)
+        Some(Dataset.ofRows(session, plan.transformUp {
+          case p if p eq leaf => aliased
+        }))
+      }
+    }
+  }
+
+  /** `out`'s analyzed plan as a template over `input`, the frame it was
+    * built from (None unless `input`'s plan occurs in it exactly once and
+    * shares no node with the plans of `fixed`, the frames `out` reads
+    * besides it).
+    */
+  def template(out: DataFrame, input: DataFrame,
+               fixed: DataFrame*): Option[PlanTemplate] = {
+    val plan = castToImpl(out).queryExecution.analyzed
+    val leaf = castToImpl(input).logicalPlan
+    val fixedNodes = fixed.map(f => planNodes(castToImpl(f).logicalPlan))
+    if (plan.collect { case p if p eq leaf => p }.size != 1 ||
+        leaf.exists(n => fixedNodes.exists(_.contains(n)))) None
+    else Some(new PlanTemplate(castToImpl(out).sparkSession, plan, leaf,
+      castToImpl(input).sparkSession))
+  }
+
+  /** Every node of `plan`, by identity. */
+  private def planNodes(plan: LogicalPlan): java.util.Set[LogicalPlan] = {
+    val s = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]())
+    plan.foreach(s.add)
+    s
+  }
 
   /** The physical plan of a streaming query's last executed micro-batch
     * (None before the first batch) — for plan-shape assertions on

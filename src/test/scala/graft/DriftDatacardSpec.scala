@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -126,5 +127,103 @@ class DriftDatacardSpec extends AnyFunSuite {
     OpCaches.releaseAll()
     assert(counts.forall(_ == counts.head),
       s"registered caches grew across batches: $counts")
+  }
+
+  private def admission(batch: DataFrame, reference: DataFrame): DataFrame =
+    StreamAdmission.admissionDatacard(batch, reference, "source", "v", "cat",
+      "vec", col("v") > 1.0, minWilsonLo = 0.0, maxPsi = 10.0, maxKs = 1.0,
+      maxJs = 1.0, minCentroidCos = -1.0, maxNormDelta = 10.0, bins = 4)
+
+  /** The datacard's rows, and the Spark jobs run while it was built
+    * (before its own action): a fresh build collects the reference's PSI
+    * edges, a batch on the kept plan runs none. */
+  private def built(batch: DataFrame, reference: DataFrame): (Seq[String], Int) = {
+    val (card, jobs) = JobCount(spark.sparkContext)(admission(batch, reference))
+    (lines(card), jobs)
+  }
+
+  /** The rows of a fresh build: a freshly derived reference equal to
+    * [[refRows]] has no kept plan. */
+  private def fresh(batch: DataFrame): Seq[String] = {
+    val (rows, jobs) = built(batch, frame(refRows))
+    assert(jobs >= 1, "a new reference frame must take the build path")
+    rows
+  }
+
+  test("admission batches on the kept plan equal a fresh build, and build with no job") {
+    OpCaches.releaseAll()
+    val reference = frame(refRows)
+    // Ragged batches of one schema: NaN, -0.0 and nulls throughout, a
+    // shifted copy, sources absent (b, then all but a), a new category.
+    val batches: Seq[Seq[R]] = Seq(
+      curRows,
+      curRows.map(r => r.copy(_2 = r._2.map(_ + 1.5))),
+      curRows.filterNot(_._1.contains("b")),
+      curRows.filter(_._1.contains("a")) :+
+        ((Some("a"), Some(Double.NaN), None, Some(Seq(0.0, 0.0)))),
+      curRows.map(r => r.copy(_3 = r._3.map(_ + "2"), _4 = r._4.map(_.reverse))))
+    try {
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        val (got, jobs) = built(frame(rows), reference)
+        if (i == 0) assert(jobs >= 1, "the first batch builds the datacard")
+        else assert(jobs == 0, s"batch $i ran $jobs jobs before its action")
+        assert(got == fresh(frame(rows)), s"batch $i")
+      }
+    } finally OpCaches.releaseAll()
+  }
+
+  test("the kept admission plan falls back to a fresh build") {
+    OpCaches.releaseAll()
+    val reference = frame(refRows)
+    def fallsBack(batch: DataFrame, why: String): Unit = {
+      val (got, jobs) = built(batch, reference)
+      assert(jobs >= 1, s"$why: the kept plan ran")
+      assert(got == fresh(batch), why)
+    }
+    try {
+      built(frame(curRows), reference)
+      // The same names and types, `v` not nullable.
+      val strict = curRows.map(r => (r._1, r._2.getOrElse(0.0), r._3, r._4))
+        .toDF("source", "v", "cat", "vec")
+      assert(strict.schema.map(f => (f.name, f.dataType)) ==
+        frame(curRows).schema.map(f => (f.name, f.dataType)) &&
+        strict.schema != frame(curRows).schema)
+      fallsBack(strict, "nullability")
+      built(frame(curRows), reference)
+      OpCaches.releaseAll()
+      fallsBack(frame(curRows), "after releaseAll")
+      fallsBack(reference, "batch = reference")
+      // The plan kept after the fallbacks serves the next batch again.
+      built(frame(curRows), reference)
+      val (got, jobs) = built(frame(curRows.reverse), reference)
+      assert(jobs == 0 && got == fresh(frame(curRows)))
+    } finally OpCaches.releaseAll()
+  }
+
+  test("admission on a stream: each micro-batch on the kept plan equals a fresh build") {
+    // foreachBatch hands every batch over as a new plan of the stream's
+    // own session; the kept plan must take each of them as its leaf.
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    OpCaches.releaseAll()
+    val reference = frame(refRows)
+    val input = MemoryStream[R](implicitly[org.apache.spark.sql.Encoder[R]], spark)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[String], Int, Seq[String])]
+    val q = input.toDF().toDF("source", "v", "cat", "vec").writeStream
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        val (got, jobs) = built(b, reference)
+        seen += ((id, got, jobs, lines(admission(b, frame(refRows)))))
+        ()
+      }.start()
+    try {
+      Seq(curRows, curRows.filterNot(_._1.contains("a")),
+          curRows.map(r => r.copy(_2 = r._2.map(_ * 2))), curRows.reverse)
+        .foreach { rows => input.addData(rows); q.processAllAvailable() }
+    } finally { q.stop(); OpCaches.releaseAll() }
+    assert(seen.map(_._1) == Seq(0L, 1L, 2L, 3L))
+    seen.foreach { case (id, got, jobs, fresh) =>
+      assert(got == fresh, s"batch $id")
+      if (id > 0) assert(jobs == 0, s"batch $id ran $jobs jobs before its action")
+    }
   }
 }

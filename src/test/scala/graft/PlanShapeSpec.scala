@@ -792,26 +792,30 @@ class PlanShapeSpec extends AnyFunSuite {
       case _ => false
     }
 
+  /** `documents` relations in an optimized plan, entering each cached
+    * frame's logical plan once. */
+  private def documentsRelations(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val entered = scala.collection.mutable.Set.empty[LogicalPlan]
+    def walk(n: LogicalPlan): Int = n match {
+      case r: LogicalRelation => if (readsDocuments(r)) 1 else 0
+      case m: InMemoryRelation =>
+        if (entered.add(m.cacheBuilder.logicalPlan))
+          walk(m.cacheBuilder.logicalPlan)
+        else 0
+      case other => other.children.map(walk).sum
+    }
+    walk(p)
+  }
+
   test("curation rule gate is a filter: no flag-frame join re-reads documents") {
     // The rule gate (TextAnalysis.rulePassCol) filters the scan row; the
     // old shape built the ruleFlags frame from a second documents read
     // and joined it back on doc_id. These pipelines scope-cache their
     // survivors, so the count enters each cached frame's plan once.
-    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    def documentsRelations(p: LogicalPlan): Int = {
-      val entered = scala.collection.mutable.Set.empty[LogicalPlan]
-      def walk(n: LogicalPlan): Int = n match {
-        case r: LogicalRelation => if (readsDocuments(r)) 1 else 0
-        case m: InMemoryRelation =>
-          if (entered.add(m.cacheBuilder.logicalPlan))
-            walk(m.cacheBuilder.logicalPlan)
-          else 0
-        case other => other.children.map(walk).sum
-      }
-      walk(p)
-    }
     for ((q, expected) <- docRelationsRuleGated) {
       val opt = SparkEntry.queries(q)(spark, dir).queryExecution.optimizedPlan
       val n = documentsRelations(opt)
@@ -824,6 +828,21 @@ class PlanShapeSpec extends AnyFunSuite {
   // Measured with the rule gate as a filter. Joining the flag frame back
   // adds 1 to each, and 16 to v8, whose gated frame feeds the pair
   // mining's cached frames and the cached sample.
+  test("curation e2e language gate is a filter: no langId join re-reads documents") {
+    // TextAnalysis.langIdCol filters the scan row; the old shape built the
+    // langId frame from a second documents read and joined it back on
+    // doc_id.
+    val opt = SparkEntry.queries("curation_pipeline_e2e")(spark, dir)
+      .queryExecution.optimizedPlan
+    val n = documentsRelations(opt)
+    graft.ops.OpCaches.releaseAll()
+    assert(n <= docRelationsE2e, s"curation_pipeline_e2e has $n documents " +
+      s"relations (measured $docRelationsE2e): a langId join back?\n" +
+      opt.toString.take(1500))
+  }
+  // Measured with the language gate as a filter; the joined shape read 5.
+  private val docRelationsE2e = 4
+
   private val docRelationsRuleGated = Seq(
     "curation_pipeline_v3" -> 17, "curation_pipeline_v5" -> 1,
     "curation_pipeline_v6" -> 6, "curation_pipeline_v7" -> 4,
@@ -1143,14 +1162,27 @@ class PlanShapeSpec extends AnyFunSuite {
       "source", "value", "lang", "vec", col("value") > 5.0, minWilsonLo = 0.2,
       maxPsi = 1.0, maxKs = 0.5, maxJs = 0.4, minCentroidCos = 0.8,
       maxNormDelta = 0.3)
-    try {
+    def guard(rep: org.apache.spark.sql.DataFrame, which: String): Unit = {
       assert(org.apache.spark.sql.graft.CatalystBridge.realScanCounts(rep) == ((1, 1)),
-        s"expected (batch file scans, reference cache scans) = (1, 1):\n" +
+        s"$which: expected (batch file scans, reference cache scans) = (1, 1):\n" +
           rep.queryExecution.executedPlan)
       assert(rep.collect().length == 8)
       val exchanges = shuffleExchanges(rep)
-      assert(exchanges <= 2, s"admission batch exchanges grew: $exchanges " +
-        s"(measured 2):\n${rep.queryExecution.executedPlan}")
+      assert(exchanges <= 2, s"$which: admission batch exchanges grew: " +
+        s"$exchanges (measured 2):\n${rep.queryExecution.executedPlan}")
+    }
+    try {
+      guard(rep, "first batch")
+      // The next batch runs the kept plan over its own scan (no job while
+      // the datacard is built) and keeps the same shape.
+      val batch2 = spark.read.parquet(write("batch2", 2.0))
+      val (rep2, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
+        graft.streaming.StreamAdmission.admissionDatacard(batch2, reference,
+          "source", "value", "lang", "vec", col("value") > 5.0, minWilsonLo = 0.2,
+          maxPsi = 1.0, maxKs = 0.5, maxJs = 0.4, minCentroidCos = 0.8,
+          maxNormDelta = 0.3))
+      assert(jobs == 0, s"the second batch built its datacard afresh ($jobs jobs)")
+      guard(rep2, "second batch")
     } finally graft.ops.OpCaches.releaseAll()
   }
 }

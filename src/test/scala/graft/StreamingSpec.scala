@@ -173,6 +173,35 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("bundle KPI step is one aggregation: at most 2 jobs, moments of each cohort") {
+    import graft.streaming.BundleKpiSink
+    // Four partitions; a NULL value inside each cohort, and a NULL user
+    // (its predicate is NULL, so it is in neither cohort). The second
+    // batch runs the first one's kept aggregation.
+    def batch(from: Long) = spark.range(from, from + 40, 1, 4).select(
+      when(col("id") =!= 7, col("id")).as("user_id"),
+      when(col("id") % 9 =!= 0, col("id") * 0.5).as("value"))
+    val subject = col("user_id").isin((0L until 80L by 3): _*)
+    val control = col("user_id") % 2 === 0
+    val sink = new BundleKpiSink(subject, control, "value")
+    def moments(b: DataFrame, pred: Column) = {
+      val v = col("value")
+      val r = b.filter(pred).agg(count(v), sum(v), min(v), max(v), sum(v * v)).head()
+      BundleKpiSink.Acc(r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4))
+    }
+    val expected = Seq(0L, 40L).scanLeft((BundleKpiSink.Acc.empty, BundleKpiSink.Acc.empty)) {
+      case ((s, c), from) =>
+        (s.merge(moments(batch(from), subject)), c.merge(moments(batch(from), control)))
+    }.tail
+    Seq(0L, 40L).zipWithIndex.foreach { case (from, id) =>
+      val (_, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext)(
+        sink.step(batch(from), id.toLong))
+      assert(jobs <= 2, s"KPI step $id ran $jobs jobs")
+    }
+    assert(sink.history == Seq(0L, 1L).zip(expected))
+  }
+
   test("streaming session windows match batch sessionization counts") {
     // session_window (10-minute gap) on a stream ≡ batch SeriesOps.sessionize
     // with the same gap: same number of sessions, same per-session counts.
