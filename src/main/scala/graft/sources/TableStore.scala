@@ -29,19 +29,10 @@ object TableStore {
   /** S9/S10 sink: append a long-format series frame, date-partitioned and
     * user-bucketed. One-time shuffle at write; every later per-user
     * operator reads pre-clustered buckets.
-    *
-    * The shuffle is the writer's own bucketing: `repartition(buckets,
-    * userCol)` hashes as the bucket id does (`pmod(murmur3(userCol),
-    * buckets)`), so each of the `buckets` write tasks holds exactly one
-    * bucket, and an append writes at most one file per (date, bucket)
-    * whatever its input partitioning. A one-split micro-batch thus writes
-    * its buckets in parallel instead of all from one task; AQE does not
-    * coalesce a repartition to a fixed count.
     */
   def appendSeries(df: DataFrame, table: String, userCol: String, tsCol: String,
                    buckets: Int = 64): Unit =
     df.withColumn("date", to_date(col(tsCol)))
-      .repartition(buckets, col(userCol))
       .write.mode(SaveMode.Append)
       .partitionBy("date")
       .bucketBy(buckets, userCol)

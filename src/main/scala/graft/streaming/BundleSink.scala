@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CatalystBridge
-import org.apache.spark.sql.graft.CatalystBridge.PlanTemplate
 
 /** Incremental maintenance of the QueryEngine KPI bundle over a stream
   * (SURVEY.md §2.10 + §3.1 lifecycle).
@@ -52,30 +50,19 @@ final class BundleKpiSink(subjectPred: Column, controlPred: Column,
   private val emitted =
     scala.collection.mutable.ArrayBuffer.empty[(Long, (Acc, Acc))]
 
-  /** The first batch's aggregation, kept to run over later batches. */
-  @transient private var kept: PlanTemplate = _
-
   /** foreachBatch hook: ONE distributed aggregation over THIS batch only,
     * merged into the running moments. Each cohort's value is projected
     * once, as `when(pred, value)` (null outside the cohort), and all ten
     * moments aggregate over the two projected columns: each cohort sees
     * the rows its filter kept, summed per partition in the same order,
     * and each predicate (a long `isin`, say) is evaluated once per row.
-    * The aggregation is built for the first batch only: a later batch of
-    * the same schema and session runs its analyzed plan
-    * (`CatalystBridge.template`), so the predicates are not analyzed
-    * again per batch.
     */
   def step(batch: DataFrame, batchId: Long): Unit = synchronized {
-    val r = Option(kept).flatMap(_.bind(batch)).getOrElse {
-      val v = col(valueCol)
-      val ms = moments(col("__subj")) ++ moments(col("__ctrl"))
-      val agg = batch.select(when(subjectPred, v).as("__subj"),
-          when(controlPred, v).as("__ctrl"))
-        .agg(ms.head, ms.tail: _*)
-      kept = CatalystBridge.template(agg, batch).orNull
-      agg
-    }.head()
+    val v = col(valueCol)
+    val ms = moments(col("__subj")) ++ moments(col("__ctrl"))
+    val r = batch.select(when(subjectPred, v).as("__subj"),
+        when(controlPred, v).as("__ctrl"))
+      .agg(ms.head, ms.tail: _*).head()
     subj = subj.merge(accOf(r, 0))
     ctrl = ctrl.merge(accOf(r, 5))
     emitted += batchId -> (subj, ctrl)

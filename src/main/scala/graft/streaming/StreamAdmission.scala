@@ -29,10 +29,11 @@ import graft.ops.DataQuality
   * the same schema, with equal arguments and from the same session, runs
   * that plan over its own rows instead of building the datacard again.
   * Both end at `graft.ops.OpCaches.releaseAll()`: the plan is used only
-  * while the profile is cached, so the first batch after a release
-  * builds afresh and caches the profile again. Call it once, after the
-  * stream stops: releasing per batch would re-scan the reference and
-  * rebuild the datacard every batch.
+  * while its profile is cached, and the next call after a release drops
+  * every plan whose profile was released (with the batch rows its leaf
+  * may hold), builds afresh and caches the profile again. Call it once,
+  * after the stream stops: releasing per batch would re-scan the
+  * reference and rebuild the datacard every batch.
   */
 object StreamAdmission {
 
@@ -43,7 +44,8 @@ object StreamAdmission {
                                    plan: PlanTemplate)
 
   /** Keyed weakly on the reference frame itself: a plan lives no longer
-    * than the reference it was built against. */
+    * than the reference it was built against, nor past the first call
+    * after its profile is released. */
   private val planned = new java.util.WeakHashMap[DataFrame, Planned]()
 
   /** The FOUR-ARM admission datacard per micro-batch — the streaming
@@ -76,10 +78,10 @@ object StreamAdmission {
                         maxNormDelta: Double, bins: Int = 10): DataFrame = {
     val args = Seq(groupCol, valueCol, catCol, vecCol, quality, minWilsonLo,
       maxPsi, maxKs, maxJs, minCentroidCos, maxNormDelta, bins)
-    planned.synchronized(Option(planned.get(reference)))
-      .filter(p => p.args == args &&
-        p.profile.storageLevel != StorageLevel.NONE)
-      .flatMap(_.plan.bind(batch))
+    planned.synchronized {
+      planned.values.removeIf(_.profile.storageLevel == StorageLevel.NONE)
+      Option(planned.get(reference))
+    }.filter(_.args == args).flatMap(_.plan.bind(batch))
       .getOrElse {
         val profile = DataQuality.referenceProfile(reference, groupCol,
           valueCol, catCol, vecCol)

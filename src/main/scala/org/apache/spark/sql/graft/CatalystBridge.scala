@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.SparkPlan
@@ -51,26 +51,35 @@ object CatalystBridge {
   }
 
   /** `out`'s analyzed plan as a template over `input`, the frame it was
-    * built from (None unless `input`'s plan occurs in it exactly once and
-    * shares no node with the plans of `fixed`, the frames `out` reads
-    * besides it).
+    * built from, and which `out` must read exactly once. None unless
+    * `input`'s plan occurs in it exactly once (by identity), every leaf
+    * relation it reads, subqueries included, is read once and belongs to
+    * that occurrence or to the plans of `fixed` (the frames `out` reads
+    * besides it), and `input` shares no node with `fixed`. A second read
+    * of the input, which [[PlanTemplate.bind]] would leave on the old
+    * rows, is refused: a self-join's analysis copies one side into new
+    * nodes, and a subquery over the input repeats its leaves.
     */
   def template(out: DataFrame, input: DataFrame,
                fixed: DataFrame*): Option[PlanTemplate] = {
     val plan = castToImpl(out).queryExecution.analyzed
     val leaf = castToImpl(input).logicalPlan
-    val fixedNodes = fixed.map(f => planNodes(castToImpl(f).logicalPlan))
-    if (plan.collect { case p if p eq leaf => p }.size != 1 ||
-        leaf.exists(n => fixedNodes.exists(_.contains(n)))) None
+    val fixedNodes = planNodes(fixed.map(f => castToImpl(f).logicalPlan): _*)
+    val inputNodes = planNodes(leaf)
+    val reads = plan.collectWithSubqueries { case r: LeafNode => r }
+    if (plan.collectWithSubqueries { case p if p eq leaf => p }.size != 1 ||
+        planNodes(reads: _*).size != reads.size ||
+        !reads.forall(r => inputNodes.contains(r) || fixedNodes.contains(r)) ||
+        leaf.exists(fixedNodes.contains)) None
     else Some(new PlanTemplate(castToImpl(out).sparkSession, plan, leaf,
       castToImpl(input).sparkSession))
   }
 
-  /** Every node of `plan`, by identity. */
-  private def planNodes(plan: LogicalPlan): java.util.Set[LogicalPlan] = {
+  /** Every node of `plans`, by identity. */
+  private def planNodes(plans: LogicalPlan*): java.util.Set[LogicalPlan] = {
     val s = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[LogicalPlan, java.lang.Boolean]())
-    plan.foreach(s.add)
+    plans.foreach(_.foreach(s.add))
     s
   }
 

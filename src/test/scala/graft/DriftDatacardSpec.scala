@@ -200,6 +200,17 @@ class DriftDatacardSpec extends AnyFunSuite {
     } finally OpCaches.releaseAll()
   }
 
+  test("a plan template refuses a plan that reads its input twice") {
+    import org.apache.spark.sql.graft.CatalystBridge
+    val in = frame(curRows).select(col("source"), col("v"))
+    assert(CatalystBridge.template(in.filter(col("v") > 1.0), in).isDefined)
+    // A self-join: analysis copies one side into new nodes.
+    assert(CatalystBridge.template(in.as("l").join(in.as("r"), "source"), in).isEmpty)
+    // A scalar subquery over the input.
+    assert(CatalystBridge.template(
+      in.filter(col("v") < in.select(max(col("v"))).scalar()), in).isEmpty)
+  }
+
   test("admission on a stream: each micro-batch on the kept plan equals a fresh build") {
     // foreachBatch hands every batch over as a new plan of the stream's
     // own session; the kept plan must take each of them as its leaf.

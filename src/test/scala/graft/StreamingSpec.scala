@@ -176,8 +176,7 @@ class StreamingSpec extends AnyFunSuite {
   test("bundle KPI step is one aggregation: at most 2 jobs, moments of each cohort") {
     import graft.streaming.BundleKpiSink
     // Four partitions; a NULL value inside each cohort, and a NULL user
-    // (its predicate is NULL, so it is in neither cohort). The second
-    // batch runs the first one's kept aggregation.
+    // (its predicate is NULL, so it is in neither cohort).
     def batch(from: Long) = spark.range(from, from + 40, 1, 4).select(
       when(col("id") =!= 7, col("id")).as("user_id"),
       when(col("id") % 9 =!= 0, col("id") * 0.5).as("value"))

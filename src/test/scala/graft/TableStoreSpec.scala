@@ -36,25 +36,6 @@ class TableStoreSpec extends AnyFunSuite {
     assert(spark.table("graft_test.hr").count() == 4)
   }
 
-  test("series append writes at most one file per (date, bucket) whatever the input partitioning") {
-    TableStore.createDatabase(spark, "graft_test")
-    spark.sql("DROP TABLE IF EXISTS graft_test.hr_files")
-    // Eight input partitions, each holding every bucket on both dates: a
-    // write task per input partition would write up to 8 × 2 × 4 files.
-    val series = spark.range(0, 800, 1, 8).select(
-      (col("id") % 50).as("user_id"),
-      timestamp_seconds(lit(1704067200L) + col("id") % 2 * 86400L).as("timestamp"),
-      (col("id") * 0.25).as("value"))
-    TableStore.appendSeries(series, "graft_test.hr_files", "user_id", "timestamp",
-      buckets = 4)
-    val back = spark.table("graft_test.hr_files")
-    val files = back.inputFiles.length
-    assert(files <= 8, s"$files data files for 2 dates × 4 buckets")
-    val cols = Seq("user_id", "timestamp", "value").map(col)
-    assert(back.select(cols: _*).collect().toSet == series.collect().toSet)
-    assert(back.count() == 800)
-  }
-
   test("compaction collapses small files and preserves every row") {
     val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/t"
     val df = spark.range(0, 10000).selectExpr("id", "id * 2 AS v")
