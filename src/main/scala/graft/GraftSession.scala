@@ -37,6 +37,21 @@ import org.apache.spark.sql.SparkSession
   * The first session in a JVM therefore fixes the bound for every later
   * session; every engine session is built through [[configure]], so all
   * of them agree.
+  *
+  * Local files are written without forking a process. Without the native
+  * Hadoop library (Spark's binary distribution ships none), Hadoop's
+  * `file:` file system forks `chmod` for every file, `.crc` side file and
+  * directory it creates, and `readlink` for every `FileContext` rename (see
+  * [[graft.sources.NioRawLocalFileSystem]]). [[configure]] points
+  * `fs.file.impl` and `fs.AbstractFileSystem.file.impl` at
+  * [[graft.sources.GraftLocalFileSystem]] and [[graft.sources.GraftLocalFs]],
+  * the stock local classes with those calls done through `java.nio`:
+  * checksums, the commit protocol, the layout and the bits a file gets
+  * stay the same. Traced stream run (seed 7804, 4 cores): the store append
+  * fell from 339 to 188 ms a batch. Hadoop caches a `FileSystem` per
+  * scheme and user for the whole JVM, so like the codegen bound this holds
+  * for every session only when the JVM's first `file:` `FileSystem` is
+  * made from a session's configuration.
   */
 object GraftSession {
 
@@ -45,7 +60,9 @@ object GraftSession {
 
   /** Configs every Graft session needs regardless of master. Installs the
     * engine's Catalyst extensions (DateCastRewrite) — a no-op when an
-    * existing session is reused by getOrCreate.
+    * existing session is reused by getOrCreate — and the engine's `file:`
+    * file systems, which write local files without forking `chmod` or
+    * `readlink` (see the object doc).
     */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.withExtensions(new graft.plans.GraftExtensions)
@@ -66,6 +83,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.codegen.useIdInClassName", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

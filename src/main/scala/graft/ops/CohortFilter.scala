@@ -71,11 +71,20 @@ object CohortFilter {
 
   /** J1: cohort semi-join — restrict a (huge) series table to a (small)
     * cohort. Broadcast left-semi: no shuffle of the series side at scale.
+    *
+    * A cohort is a subjects selection, keyed by the subjects' primary key,
+    * so its keys are already distinct and are broadcast as they are: no
+    * aggregation, so no exchange and no job of their own. A left-semi join's
+    * rows do not depend on duplicate keys, so a cohort with duplicates
+    * still gives the right rows; each duplicate is broadcast, though.
     */
   def semiJoin(series: DataFrame, cohort: DataFrame, key: String): DataFrame =
-    series.join(broadcast(cohort.select(key).distinct()), Seq(key), "left_semi")
+    series.join(broadcast(cohort.select(key)), Seq(key), "left_semi")
 
-  /** J3/S12/U3: anti-join — rows whose key is absent from `existing`. */
+  /** J3/S12/U3: anti-join — rows whose key is absent from `existing`.
+    * `existing` may repeat keys (U3 passes every event's `user_id`), so
+    * they are made distinct before the broadcast.
+    */
   def antiJoin(incoming: DataFrame, existing: DataFrame, key: String): DataFrame =
     incoming.join(broadcast(existing.select(key).distinct()), Seq(key), "left_anti")
 }

@@ -5,7 +5,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Lifecycle registry for op-internal caches.
   *
-  * Several operators ([[Dedup]], [[Similarity]], [[graft.query.QueryEngine]])
+  * Several operators ([[Dedup]], [[Similarity]], [[DataQuality]])
   * cache an intermediate frame that feeds multiple consumers inside one
   * returned plan (e.g. a shingle set read by the signature, size, and both
   * verification joins). The returned DataFrame is lazy, so the op cannot

@@ -27,21 +27,16 @@ object QueryEngine {
       todKpis: DataFrame)      // per labeled time-of-day range KPIs
 
   /** Per-feature KPI table — the dashboard's multi-feature results view
-    * (one KPI row per feature table, subject vs control): runs the cohort
-    * resolution ONCE and folds every feature series through it.
-    */
-  /** `cacheCohorts = false` skips the subject-cohort `.cache()` for
-    * long-lived sessions issuing many engine calls — cached partitions
-    * otherwise accumulate until eviction pressure (the cache is only a
-    * win when the bundle's frames are each materialized).
+    * (one KPI row per feature table, subject vs control): folds every
+    * feature series through the same two cohort frames. The cohorts are not
+    * cached; each is resolved once per call because every feature's
+    * semi-join broadcasts the same cohort plan, and Spark reuses that
+    * broadcast exchange across the union's branches.
     */
   def runFeatures(spec: QuerySpec, subjects: DataFrame,
                   features: Map[String, DataFrame],
-                  userCol: String, tsCol: String, valueCol: String,
-                  cacheCohorts: Boolean = true): DataFrame = {
-    val resolved = CohortFilter(subjects, spec.subjectSelection.filters())
-    val subjectCohort =
-      if (cacheCohorts) graft.ops.OpCaches.scoped(resolved) else resolved
+                  userCol: String, tsCol: String, valueCol: String): DataFrame = {
+    val subjectCohort = CohortFilter(subjects, spec.subjectSelection.filters())
     val controlCohort = CohortFilter(subjects, spec.controlSelection.filters())
     features.toSeq.sortBy(_._1).map { case (name, series) =>
       val windowed = SeriesOps.dateRange(series, tsCol, spec.startDate, spec.endDate)
@@ -67,17 +62,17 @@ object QueryEngine {
     graft.sources.TableStore.exportCsv(bundle.todKpis, s"$dir/tod_kpis")
   }
 
-  /** @param subjects  subjects table; must expose `userCol`
+  /** The cohorts are not cached: the dashboard materializes only `kpis`,
+    * which reads each cohort once, so a cache would be filled for a
+    * single read.
+    *
+    * @param subjects  subjects table; must expose `userCol`, its primary key
     * @param series    long-format series; must expose `userCol`, `tsCol`, `valueCol`
-    * @param cacheCohorts  see [[runFeatures]]
     */
   def run(spec: QuerySpec, subjects: DataFrame, series: DataFrame,
-          userCol: String, tsCol: String, valueCol: String,
-          cacheCohorts: Boolean = true): ResultBundle = {
+          userCol: String, tsCol: String, valueCol: String): ResultBundle = {
 
-    val resolved = CohortFilter(subjects, spec.subjectSelection.filters())
-    val subjectCohort =
-      if (cacheCohorts) graft.ops.OpCaches.scoped(resolved) else resolved
+    val subjectCohort = CohortFilter(subjects, spec.subjectSelection.filters())
     val controlCohort = CohortFilter(subjects, spec.controlSelection.filters())
 
     val windowed = SeriesOps.dateRange(series, tsCol, spec.startDate, spec.endDate)

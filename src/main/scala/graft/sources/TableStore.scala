@@ -29,6 +29,14 @@ object TableStore {
   /** S9/S10 sink: append a long-format series frame, date-partitioned and
     * user-bucketed. One-time shuffle at write; every later per-user
     * operator reads pre-clustered buckets.
+    *
+    * A write task writes one file per (date, bucket) it holds, plus its
+    * `.crc` side file, and the commit makes the partition directories.
+    * Without the native Hadoop library, Hadoop's stock local file system
+    * forks a `chmod` process for each of these; sessions built by
+    * [[graft.GraftSession.configure]] write a local store through
+    * [[graft.sources.GraftLocalFileSystem]], which sets the same bits
+    * without one.
     */
   def appendSeries(df: DataFrame, table: String, userCol: String, tsCol: String,
                    buckets: Int = 64): Unit =

@@ -22,24 +22,26 @@ class CodegenReuseSpec extends AnyFunSuite {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** Each op's rows, sorted as strings, and the classes the pass compiled. */
-  private def pass(): (Seq[Seq[String]], Long) = {
-    val c0 = compiles
-    val rows = ops.map { n =>
+  /** Each op's rows, sorted as strings, and the classes it compiled. */
+  private def pass(): Seq[(Seq[String], Long)] =
+    ops.map { n =>
+      val c0 = compiles
       val r = SparkEntry.queries(n)(spark, dir).collect().map(_.toString).sorted.toSeq
+      val compiled = compiles - c0
       graft.ops.OpCaches.releaseAll(blocking = true)
       spark.catalog.clearCache()
-      r
+      (r, compiled)
     }
-    (rows, compiles - c0)
-  }
 
   test("a second pass over the analytics ops compiles no generated class and returns the same rows") {
-    val (first, firstCompiles) = pass()
-    val (second, secondCompiles) = pass()
-    assert(secondCompiles == 0,
-      s"the repeat pass compiled $secondCompiles classes (first pass: $firstCompiles)")
-    ops.zip(first.zip(second)).foreach { case (n, (a, b)) =>
+    val first = pass()
+    val second = pass()
+    val recompiled = ops.zip(second.map(_._2)).filter(_._2 > 0)
+    assert(recompiled.isEmpty,
+      s"the repeat pass compiled ${recompiled.map(_._2).sum} classes in " +
+        recompiled.map { case (n, c) => s"$n ($c)" }.mkString(", ") +
+        s" (first pass: ${ops.zip(first.map(_._2)).map { case (n, c) => s"$n $c" }.mkString(", ")})")
+    ops.zip(first.zip(second)).foreach { case (n, ((a, _), (b, _))) =>
       assert(a == b, s"$n returned different rows on the repeat pass")
     }
   }

@@ -70,4 +70,14 @@ class CohortFilterSpec extends AnyFunSuite {
       .select("user_id").as[String].collect().toSeq
     assert(anti == Seq("u9"))
   }
+
+  test("semi-join rows do not depend on duplicate cohort keys") {
+    val series = Seq(("u1", 1.0), ("u1", 1.5), ("u2", 2.0), ("u9", 9.0))
+      .toDF("user_id", "value")
+    val cohort = subjects.select("user_id")
+    def rows(c: org.apache.spark.sql.DataFrame) =
+      CohortFilter.semiJoin(series, c, "user_id").as[(String, Double)].collect().sorted.toSeq
+    assert(rows(cohort.union(cohort).union(cohort)) == rows(cohort))
+    assert(rows(cohort) == Seq(("u1", 1.0), ("u1", 1.5), ("u2", 2.0)))
+  }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graft.CatalystBridge
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,8 +20,50 @@ class PlanShapeSpec extends AnyFunSuite {
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
 
   test("cohort semi-join broadcasts (never shuffles the series side)") {
-    val p = plan("p3_semi_join_cohort")
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"), p.take(800))
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val df = SparkEntry.queries("p3_semi_join_cohort")(spark, dir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    // The cohort's keys are broadcast as they are: no aggregation, so no
+    // exchange on the broadcast side, and none on the series side.
+    assert(executedNodes(p).exists {
+      case j: BroadcastHashJoinExec => j.joinType == LeftSemi
+      case _ => false
+    }, p.toString.take(800))
+    assert(shuffleExchanges(df) == 0, s"p3 shuffles:\n${p.toString.take(1200)}")
+  }
+
+  test("the cohort requests run within their measured Spark jobs") {
+    // A session's first load of a table file infers its schema with a job
+    // of its own: count a warm repeat, build and collect together.
+    def jobs(q: String): Int = {
+      SparkEntry.queries(q)(spark, dir).collect()
+      JobCount(spark.sparkContext)(SparkEntry.queries(q)(spark, dir).collect())._2
+    }
+    val e2e = jobs("cohort_analysis_e2e")
+    assert(e2e <= 6, s"cohort_analysis_e2e ran $e2e jobs (measured 6)")
+    val p3 = jobs("p3_semi_join_cohort")
+    assert(p3 <= 2, s"p3_semi_join_cohort ran $p3 jobs (measured 2)")
+    val mf = jobs("cohort_multi_feature")
+    assert(mf <= 12, s"cohort_multi_feature ran $mf jobs (measured 12)")
+  }
+
+  test("multi-feature KPIs build each cohort's broadcast once and reuse it") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    val df = SparkEntry.queries("cohort_multi_feature")(spark, dir)
+    df.collect()
+    val nodes = executedNodes(df.queryExecution.executedPlan)
+    // Three features, each semi-joined to the subject and the control
+    // cohort: two hashed broadcasts built, the other four reused.
+    val built = nodes.count {
+      case b: BroadcastExchangeExec => b.mode.isInstanceOf[HashedRelationBroadcastMode]
+      case _ => false
+    }
+    val reused = nodes.count(_.isInstanceOf[ReusedExchangeExec])
+    assert(built == 2 && reused >= 4,
+      s"cohort broadcasts built $built, reused $reused:\n${df.queryExecution.executedPlan.toString.take(1500)}")
   }
 
   test("METs windows share ONE user exchange; weights join broadcasts") {
@@ -1115,21 +1161,18 @@ class PlanShapeSpec extends AnyFunSuite {
     graft.ops.OpCaches.releaseAll()
   }
 
-  /** Shuffle exchanges of an EXECUTED plan, by traversal: through AQE
-    * wrappers and query stages into their exchanges and into subquery
-    * plans; a reused exchange or a cache scan counts nothing. */
-  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    def walk(p: SparkPlan): Int = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case e: ShuffleExchangeExec => 1 + walk(e.child)
-      case other => (other.children ++ other.subqueries).map(walk).sum
-    }
-    walk(df.queryExecution.executedPlan)
+  /** The nodes of an EXECUTED plan, by traversal: through AQE wrappers
+    * and query stages into their exchanges and into subquery plans; a
+    * reused exchange or a cache scan is a leaf. */
+  private def executedNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan)
+    case q: QueryStageExec => executedNodes(q.plan)
+    case other => other +: (other.children ++ other.subqueries).flatMap(executedNodes)
   }
+
+  /** Shuffle exchanges of an executed plan (see [[executedNodes]]). */
+  private def shuffleExchanges(df: org.apache.spark.sql.DataFrame): Int =
+    executedNodes(df.queryExecution.executedPlan).count(_.isInstanceOf[ShuffleExchangeExec])
 
   test("realScanCounts counts file scans inside subquery plans") {
     val path = java.nio.file.Files.createTempDirectory("graft_subq").toString + "/t"

@@ -158,7 +158,7 @@ class StreamingSpec extends AnyFunSuite {
         val spec = QuerySpec(ByIds("user_id", Seq("u1", "u2")), AllUsers,
           "1970-01-01", "1970-01-02")
         val expect = QueryEngine.run(spec, subjects, series,
-          "user_id", "ts", "value", cacheCohorts = false).kpis.head()
+          "user_id", "ts", "value").kpis.head()
         val got = sink.kpis(spark).head()
         Seq("subj_avg", "subj_min", "subj_max", "ctrl_avg", "ctrl_std",
           "delta_avg").foreach { c =>

@@ -89,25 +89,36 @@ if [ -n "$({ git diff --name-only HEAD -- perfbench src/main/scala;
   }
   tail -1 /tmp/precommit_perfbench.log
 fi
-# No tier-1 test checks the replayed, stored and KPI totals of a stream end
-# to end; the benchmark's stream workload does (DuckDB and batch-engine
-# checks). A change to the streaming or sources layer runs it once.
-if [ -n "$({ git diff --name-only HEAD -- src/main/scala/graft/streaming \
-      src/main/scala/graft/sources;
-    git ls-files --others --exclude-standard -- src/main/scala/graft/streaming \
-      src/main/scala/graft/sources; })" ]; then
-  echo "[precommit] stream workload (perfbench, seed 1)"
-  python3 perfbench/run.py --workload stream --seed 1 --seconds 10 --trace 0 \
-    > /tmp/precommit_stream.log 2>&1 || true
-  LAST=$(tail -1 /tmp/precommit_stream.log)
+# A perfbench workload run once (seed 1), which must end with
+# `"correct": true` and `"failed": 0`.
+workload() {
+  echo "[precommit] $1 workload (perfbench, seed 1)"
+  python3 perfbench/run.py --workload "$1" --seed 1 --seconds 10 --trace 0 \
+    > "/tmp/precommit_$1.log" 2>&1 || true
+  LAST=$(tail -1 "/tmp/precommit_$1.log")
   echo "$LAST" | python3 -c 'import json, sys
 r = json.loads(sys.stdin.read())
 sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' \
     2>/dev/null || {
-    tail -30 /tmp/precommit_stream.log
-    echo "[precommit] FAIL: stream workload"
+    tail -30 "/tmp/precommit_$1.log"
+    echo "[precommit] FAIL: $1 workload"
     exit 1
   }
   echo "$LAST"
+}
+changed() {
+  [ -n "$({ git diff --name-only HEAD -- "$@";
+    git ls-files --others --exclude-standard -- "$@"; })" ]
+}
+# Session configuration (GraftSession.configure) reaches every workload:
+# a change to it runs both.
+if changed src/main/scala/graft/GraftSession.scala; then
+  workload analytics
+  workload stream
+# No tier-1 test checks the replayed, stored and KPI totals of a stream end
+# to end; the benchmark's stream workload does (DuckDB and batch-engine
+# checks). A change to the streaming or sources layer runs it once.
+elif changed src/main/scala/graft/streaming src/main/scala/graft/sources; then
+  workload stream
 fi
 echo "[precommit] OK"
