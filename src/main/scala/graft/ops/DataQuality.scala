@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.normD
+import graft.functions.DriftKernels
 
 /** Dataset-quality auditing: referential-integrity orphan counts,
   * Benford first-digit screening, and proportion confidence intervals —
@@ -315,9 +315,10 @@ object DataQuality {
     * [[EmbeddingEval.embeddingDriftByGroup]]) joined full-outer.
     *
     * Scale shape: each snapshot is scanned ONCE into a per-group profile
-    * ([[driftProfile]]); the reference profile is scope-cached (the only
-    * scoped cache, so a stream-static caller re-deriving the same
-    * reference reads it from cache), its two PSI edges are collected as
+    * ([[driftProfile]]: one aggregation, so one exchange per side); the
+    * reference profile is scope-cached (the only scoped cache, so a
+    * stream-static caller re-deriving the same reference reads it from
+    * cache), its two PSI edges are collected as
     * literals, and the two |groups|-row profiles join full-outer once
     * and finish in one projection. A group reports when any arm has
     * evidence on either side. Output columns: `groupCol`,
@@ -345,7 +346,10 @@ object DataQuality {
   /** [[driftDatacard]] over a [[referenceProfile]] `r`, plus the current
     * side's row count `n` and its `success` count `successes` (null for a
     * group absent from `cur`) — the admission datacard's Wilson inputs,
-    * from the same scan. */
+    * from the same scan. `cur` costs one scan, one aggregation and one
+    * exchange ([[driftProfile]]); the join to `r` and the statistics after
+    * it add none: PSI bins and KS are native kernels over the sorted
+    * cells ([[Stats.binCounts]], [[Stats.ksOf]]). */
   private[graft] def driftCard(r: DataFrame, cur: DataFrame, groupCol: String,
                                valueCol: String, catCol: String, vecCol: String,
                                bins: Int, success: Column): DataFrame = {
@@ -354,7 +358,7 @@ object DataQuality {
     // groups included): the per-group extremes are collected (|groups|
     // rows) and folded into two doubles, applied as literals to both
     // sides. `Double.compare` orders NaN last, as Spark does; the cells
-    // hold no -0.0 (grouping normalizes it).
+    // hold no -0.0 (the profile normalizes it as grouping does).
     val extremes = r.select(array_min(transform(col("num_ref"), _.getField("k"))),
       array_max(transform(col("num_ref"), _.getField("k")))).collect()
     def edge(i: Int, keep: Int => Boolean) = lit(extremes
@@ -362,8 +366,7 @@ object DataQuality {
       .reduceOption((a, b) => if (keep(java.lang.Double.compare(a, b))) a else b)
       .map(Double.box).orNull).cast("double")
     val (lo, hi) = (edge(0, _ <= 0), edge(1, _ >= 0))
-    def binned(cells: Column) = Stats.binCounts(cells,
-      Stats.fixedWidthBin(_, lo, hi, bins), bins)
+    def binned(cells: Column) = Stats.binCounts(cells, bins, lo, hi)
     def total(c: String) = coalesce(col(c), lit(0L))
     val c = driftProfile(cur, groupCol, valueCol, catCol, vecCol, success, "cur")
     r.join(c, Seq(groupCol), "full_outer")
@@ -395,11 +398,10 @@ object DataQuality {
         col("n"), col("successes"))
   }
 
-  /** One snapshot's per-group drift profile in one scan: every row
-    * explodes into keyed cells — its value, its category, one per vector
-    * component, and the row itself — and a two-level aggregation folds
-    * them into one row per group (null group included). Columns, each
-    * suffixed `_side`:
+  /** One snapshot's per-group drift profile: one aggregation per group
+    * ([[graft.functions.DriftKernels.profile]]), so one exchange per
+    * side, and a projection of its fields. Columns, each suffixed
+    * `_side`:
     *   - `num`: sorted (value, count) cells of non-null `valueCol`, and
     *     `num_n` their total;
     *   - `cat`: sorted (category, count) cells of non-null `catCol`, and
@@ -408,49 +410,17 @@ object DataQuality {
     *     norm at 6 dp of the non-null vectors (both null without a
     *     non-empty vector);
     *   - `rows`: every row; `successes`: rows where `success` holds.
-    * The first aggregation combines map-side, so the shuffle carries
-    * cells, not rows.
+    * The aggregation combines map-side, so the shuffle carries cells, not
+    * rows.
     */
-  private def driftProfile(df: DataFrame, groupCol: String, valueCol: String,
-                           catCol: String, vecCol: String, success: Column,
-                           side: String): DataFrame = {
-    val (num, cat, dim, row) = (0, 1, 2, 3)
-    val vec = col(vecCol)
-    def cell(kind: Int, v: Column = lit(null).cast("double"),
-             c: Column = lit(null).cast("string"),
-             pos: Column = lit(null).cast("int"),
-             x: Column = lit(null).cast("double"), s: Column = lit(0L)) =
-      struct(lit(kind).as("kind"), v.as("v"), c.as("c"), pos.as("pos"),
-        x.as("x"), s.as("s"))
-    val cells = concat(
-      array(cell(num, v = col(valueCol).cast("double")),
-        cell(cat, c = col(catCol).cast("string")),
-        cell(row, x = when(vec.isNotNull, normD(vec)),
-          s = when(success, 1L).otherwise(0L))),
-      transform(coalesce(vec, array()), (e, i) =>
-        cell(dim, pos = i, x = e.cast("double"))))
-    val kind = col("kind")
-    def cellsOf(k: Int, key: Column, value: Column) =
-      array_sort(collect_list(when(kind === k, struct(key, value))))
-    val hasVec = count(when(kind === dim, 1)) > 0
-    df.select(col(groupCol), explode(filter(cells, e =>
-        e.getField("kind") >= dim || e.getField("v").isNotNull ||
-          e.getField("c").isNotNull)).as("e"))
-      .groupBy(col(groupCol), col("e.kind").as("kind"), col("e.v").as("v"),
-        col("e.c").as("c"), col("e.pos").as("pos"))
-      .agg(count(lit(1)).as("n"), avg(col("e.x")).as("x"),
-        sum(col("e.s")).as("s"))
-      .groupBy(col(groupCol))
-      .agg(
-        cellsOf(num, col("v").as("k"), col("n")).as(s"num_$side"),
-        sum(when(kind === num, col("n"))).as(s"num_n_$side"),
-        cellsOf(cat, col("c").as("k"), col("n")).as(s"cat_$side"),
-        sum(when(kind === cat, col("n"))).as(s"cat_n_$side"),
-        when(hasVec, transform(cellsOf(dim, col("pos"), col("x")),
-          d => round(d.getField("x"), 6))).as(s"centroid_$side"),
-        when(hasVec, round(max(when(kind === row, col("x"))), 6))
-          .as(s"norm_$side"),
-        max(when(kind === row, col("n"))).as(s"rows_$side"),
-        max(when(kind === row, col("s"))).as(s"successes_$side"))
+  private[graft] def driftProfile(df: DataFrame, groupCol: String,
+                                  valueCol: String, catCol: String,
+                                  vecCol: String, success: Column,
+                                  side: String): DataFrame = {
+    df.groupBy(col(groupCol))
+      .agg(DriftKernels.profile(col(valueCol).cast("double"),
+        col(catCol).cast("string"), col(vecCol), success).as("__p"))
+      .select(col(groupCol) +: DriftKernels.ProfileType.fieldNames.toSeq
+        .map(f => col(s"__p.$f").as(s"${f}_$side")): _*)
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for training-data pipelines: media payloads
   * travel as opaque `binary` columns with typed metadata. Header-level
@@ -23,12 +22,6 @@ import org.apache.spark.sql.types._
   * swap-in would inherit.
   */
 object Multimodal {
-
-  /** Canonical media row: id + payload + envelope metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType),
-    StructField("mime", StringType)))
 
   /** STUB decode for payloads that are neither JPEG nor PNG: deterministic
     * fake dimensions from payload size. A real deployment replaces ONLY

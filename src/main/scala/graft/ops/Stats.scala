@@ -3,6 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
+import org.apache.spark.sql.types.StringType
+
+import graft.functions.DriftKernels
 
 /** KPI / statistics aggregations (SURVEY.md §2.4 A1–A6, A10).
   *
@@ -249,19 +253,38 @@ object Stats {
       when(hi > lo, floor((v - lo) / ((hi - lo) / bins)))
         .otherwise(lit(0)))).cast("int")
 
-  /** Per-(group, `__k`) counts `__n` → one row per group: `cells`, the
-    * (k, n) pairs sorted by key, and their total `n`. */
-  private def countCells(counts: DataFrame, groupCol: String): DataFrame =
-    counts.groupBy(col(groupCol))
-      .agg(array_sort(collect_list(struct(col("__k").as("k"),
-        col("__n").as("n")))).as("cells"), sum(col("__n")).as("n"))
+  /** One row per non-null group of `df`: `cells`, the sorted (k, n)
+    * counts of its non-null `key` values, and their total `n`. A string
+    * key keeps its strings; any other key counts as a double. One
+    * aggregation — the cells of [[graft.functions.DriftKernels.profile]],
+    * so the partial buffers, and the shuffle, carry cells, not rows.
+    */
+  private[graft] def countCells(df: DataFrame, groupCol: String,
+                                key: Column): DataFrame = {
+    val keyed = df.select(col(groupCol), key.as("__k"))
+      .filter(col(groupCol).isNotNull && col("__k").isNotNull)
+    val text = keyed.schema("__k").dataType == StringType
+    val none = lit(null)
+    keyed.groupBy(col(groupCol))
+      .agg(DriftKernels.profile(
+        (if (text) none else col("__k")).cast("double"),
+        (if (text) col("__k") else none).cast("string"),
+        none.cast("array<double>"), lit(false)).as("__p"))
+      .select(col(groupCol),
+        col(if (text) "__p.cat" else "__p.num").as("cells"),
+        col(if (text) "__p.cat_n" else "__p.num_n").as("n"))
+  }
 
-  /** Per-bin counts of a cells array: `bin(k)` maps a key to its bin. */
-  private[graft] def binCounts(cells: Column, bin: Column => Column,
-                               bins: Int): Column =
-    aggregate(cells, array_repeat(lit(0L), bins), (acc, c) =>
-      transform(acc, (a, i) =>
-        when(i === bin(c.getField("k")), a + c.getField("n")).otherwise(a)))
+  /** Per-bin counts of a numeric cells array under [[fixedWidthBin]]'s
+    * binning over [lo, hi], in one native loop
+    * ([[graft.functions.DriftKernels.BinCounts]]). Cells whose keys
+    * already are bin ids bin over [0, bins]: every bin is then exactly 1
+    * wide, so each key is its own bin.
+    */
+  private[graft] def binCounts(cells: Column, bins: Int, lo: Column,
+                               hi: Column): Column =
+    CatalystBridge.column(DriftKernels.BinCounts(CatalystBridge.expression(cells),
+      CatalystBridge.expression(lo), CatalystBridge.expression(hi), bins))
 
   /** Smoothed PSI between two per-group bin-count vectors: every bin's
     * share is (n_b + 0.5) / (N + 0.5·bins), so a missing side (null
@@ -299,33 +322,30 @@ object Stats {
     require(bins > 0, "bins must be positive")
     val v = col(valueCol).cast("double")
     // Scoped caches on the edges (they feed both sides) and on each
-    // side's binned counts: a caller that re-derives the same reference
-    // (per micro-batch) reads the reference frames from the CacheManager,
-    // and each side's corpus scan runs once. Everything downstream is
+    // side's bin cells: a caller that re-derives the same reference (per
+    // micro-batch) reads the reference frames from the CacheManager, and
+    // each side's corpus scan runs once. Everything downstream is
     // (groups × bins)-bounded.
     val edges = OpCaches.scoped(ref.filter(v.isNotNull)
       .agg(min(v).as("__lo"), max(v).as("__hi")))
-    def binned(df: DataFrame) = OpCaches.scoped(df.filter(v.isNotNull)
-      .crossJoin(broadcast(edges))
-      .select(col(groupCol),
-        fixedWidthBin(v, col("__lo"), col("__hi"), bins).as("bin"))
-      .groupBy(col(groupCol), col("bin")).agg(count(lit(1)).as("__n")))
+    def binned(df: DataFrame) = OpCaches.scoped(countCells(
+      df.filter(v.isNotNull).crossJoin(broadcast(edges)), groupCol,
+      fixedWidthBin(v, col("__lo"), col("__hi"), bins)))
     psiFromBinnedByGroup(binned(ref), binned(cur), groupCol, bins)
   }
 
   /** Shared PSI downstream of [[psiByGroup]] (fixed-width bins) and
     * [[psiByGroupQuantile]] (reference-quantile bins): each side's
-    * per-(group, bin) counts fold into one bin vector per group, the two
-    * sides join full-outer on the group (a group present only in `cur` is
-    * maximal drift, not absence of evidence) and [[psiOf]] scores them.
-    * Null groups report nothing.
+    * per-group bin cells ([[countCells]] of the bin ids; null groups have
+    * none) fold into one bin vector per group, the two sides join
+    * full-outer on the group (a group present only in `cur` is maximal
+    * drift, not absence of evidence) and [[psiOf]] scores them.
     */
   private def psiFromBinnedByGroup(refB: DataFrame, curB: DataFrame,
                                    groupCol: String, bins: Int): DataFrame = {
     def vectors(df: DataFrame, out: String) =
-      countCells(df.filter(col(groupCol).isNotNull)
-          .select(col(groupCol), col("bin").as("__k"), col("__n")), groupCol)
-        .select(col(groupCol), binCounts(col("cells"), identity, bins).as(out))
+      df.select(col(groupCol),
+        binCounts(col("cells"), bins, lit(0.0), lit(bins.toDouble)).as(out))
     vectors(refB, "__p").join(vectors(curB, "__q"), Seq(groupCol), "full_outer")
       .select(col(groupCol), psiOf(col("__p"), col("__q"), bins).as("psi"))
   }
@@ -367,13 +387,10 @@ object Stats {
         col("__r").cast("long")))
       .select(col("__v"))
       .collect().map(_.getDouble(0)).toSeq.sorted
-    def binned(df: DataFrame) =
-      df.filter(v.isNotNull && col(groupCol).isNotNull)
-        .select(col(groupCol),
-          edges.foldLeft(lit(0)) { (acc, e) =>
-            acc + when(v > lit(e), 1).otherwise(0)
-          }.cast("int").as("bin"))
-        .groupBy(col(groupCol), col("bin")).agg(count(lit(1)).as("__n"))
+    def binned(df: DataFrame) = countCells(df.filter(v.isNotNull), groupCol,
+      edges.foldLeft(lit(0)) { (acc, e) =>
+        acc + when(v > lit(e), 1).otherwise(0)
+      })
     psiFromBinnedByGroup(binned(ref), binned(cur), groupCol, bins)
   }
 
@@ -1001,21 +1018,18 @@ object Stats {
 
   /** Per group, `n_ref`/`n_cur` (non-null `key` rows per side) and
     * `out` = `stat` of the two sides' sorted (key, count) cells. Each
-    * side is one two-level aggregation; the sides join full-outer on the
-    * group, so a one-sided group still reports. A group's cells are one
-    * row, so the only skew bound is one group's own distinct-key count.
-    * The reference cells are scope-cached: a per-micro-batch caller
-    * re-deriving the same reference reads them from the CacheManager.
+    * side is one aggregation ([[countCells]]); the sides join full-outer
+    * on the group, so a one-sided group still reports. A group's cells
+    * are one row, so the only skew bound is one group's own distinct-key
+    * count. The reference cells are scope-cached: a per-micro-batch
+    * caller re-deriving the same reference reads them from the
+    * CacheManager.
     */
   private def cellDrift(ref: DataFrame, cur: DataFrame, groupCol: String,
                         key: Column, out: String,
                         stat: (Column, Column, Column, Column) => Column) = {
-    def cells(df: DataFrame, s: String) =
-      countCells(df.select(col(groupCol), key.as("__k"))
-          .filter(col(groupCol).isNotNull && col("__k").isNotNull)
-          .groupBy(col(groupCol), col("__k")).agg(count(lit(1)).as("__n")),
-          groupCol)
-        .select(col(groupCol), col("cells").as(s"__$s"), col("n").as(s"n_$s"))
+    def cells(df: DataFrame, s: String) = countCells(df, groupCol, key)
+      .select(col(groupCol), col("cells").as(s"__$s"), col("n").as(s"n_$s"))
     OpCaches.scoped(cells(ref, "ref")).join(cells(cur, "cur"), Seq(groupCol),
         "full_outer")
       .na.fill(0L, Seq("n_ref", "n_cur"))
@@ -1025,32 +1039,17 @@ object Stats {
 
   /** KS statistic of two sorted numeric cells arrays (`k`, `n`) with
     * their totals — null unless both sides have evidence. EXACT over
-    * integers: one fold over the merged cells keeps the cumulative
+    * integers: one linear merge of the two sides keeps the cumulative
     * counts, and at each distinct-value boundary |cumR·n_cur − cumC·n_ref|
-    * is an integer; the single division happens once, at the max.
-    * Headroom: n_ref·n_cur < 2⁶³.
+    * is an integer; the single division happens once, at the max
+    * ([[graft.functions.DriftKernels.KsStat]]). Headroom:
+    * n_ref·n_cur < 2⁶³.
     */
   private[graft] def ksOf(ref: Column, cur: Column, nr: Column,
-                          nc: Column): Column = {
-    def tagged(cells: Column, r: Column => Column, c: Column => Column) =
-      transform(cells, x => struct(x.getField("k").as("k"),
-        r(x.getField("n")).as("r"), c(x.getField("n")).as("c")))
-    val zero = struct(lit(null).cast("double").as("k"), lit(0L).as("r"),
-      lit(0L).as("c"), lit(0L).as("d"))
-    // Before the first cell of a new value is added, the cumulative
-    // counts cover every smaller value: compare the ECDFs there.
-    val d = aggregate(array_sort(concat(tagged(ref, identity, _ => lit(0L)),
-        tagged(cur, _ => lit(0L), identity))),
-      zero, (acc, x) => struct(x.getField("k").as("k"),
-        (acc.getField("r") + x.getField("r")).as("r"),
-        (acc.getField("c") + x.getField("c")).as("c"),
-        when(x.getField("k") === acc.getField("k"), acc.getField("d"))
-          .otherwise(greatest(acc.getField("d"),
-            abs(acc.getField("r") * nc - acc.getField("c") * nr))).as("d")))
-      .getField("d")
-    when(nr > 0 && nc > 0,
-      round(d.cast("double") / (nr * nc).cast("double"), 6))
-  }
+                          nc: Column): Column =
+    CatalystBridge.column(DriftKernels.KsStat(CatalystBridge.expression(ref),
+      CatalystBridge.expression(cur), CatalystBridge.expression(nr),
+      CatalystBridge.expression(nc)))
 
   /** Jensen–Shannon divergence of two category cells arrays with their
     * totals: JS = ½·KL(p‖m) + ½·KL(q‖m), m the midpoint, over the union

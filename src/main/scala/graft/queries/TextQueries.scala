@@ -53,10 +53,6 @@ object TextQueries {
   private[queries] def sigCte(src: String) =
     s"""sig AS (SELECT doc_id, b, min(substr(md5(shingle), 1 + 8*b, 8)) AS minhash
        |  FROM $src, (SELECT unnest(range(4)) AS b) bands GROUP BY doc_id, b)""".stripMargin
-  private[queries] val candCte =
-    """cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      |  FROM sig a JOIN sig b ON a.b = b.b AND a.minhash = b.minhash
-      |    AND a.doc_id < b.doc_id)""".stripMargin
   // Planner-banded LSH candidates — the DEFAULT nearDuplicates path since
   // round 14 (round-13 verdict #2). The `plan` CTE re-derives bandsFor's
   // pick INDEPENDENTLY from the divisor grid (argmin |t½ − t|, t½ =

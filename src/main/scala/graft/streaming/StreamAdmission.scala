@@ -65,8 +65,8 @@ object StreamAdmission {
     * (categorical evidence — the JS arm's own counts, not the KS pass's)
     * to ln 2, the vector metrics stay NULL — and the verdict is an
     * explicit false, never NULL. The Wilson counts come from the batch's
-    * own drift profile, so one batch is one scan plus one join against
-    * the cached reference profile. After the first batch the datacard is
+    * own drift profile, so one batch is one scan, one aggregation (one
+    * exchange) and one join against the cached reference profile. After the first batch the datacard is
     * not built again: the kept plan runs over the new batch, which costs
     * no Spark job before the action (see the cache contract above).
     */

@@ -117,8 +117,11 @@ if changed src/main/scala/graft/GraftSession.scala; then
   workload stream
 # No tier-1 test checks the replayed, stored and KPI totals of a stream end
 # to end; the benchmark's stream workload does (DuckDB and batch-engine
-# checks). A change to the streaming or sources layer runs it once.
-elif changed src/main/scala/graft/streaming src/main/scala/graft/sources; then
+# checks). A change to the streaming or sources layer, or to the drift
+# ops and kernels every batch's admission datacard runs, runs it once.
+elif changed src/main/scala/graft/streaming src/main/scala/graft/sources \
+    src/main/scala/graft/ops/DataQuality.scala src/main/scala/graft/ops/Stats.scala \
+    src/main/scala/graft/functions/DriftKernels.scala; then
   workload stream
 fi
 echo "[precommit] OK"
